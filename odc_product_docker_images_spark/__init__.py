@@ -15,6 +15,7 @@ Layout (SURVEY.md §7):
     schemas.py    fixed StructType registry per table (§1 schema system)
     io.py         parquet scan/sink helpers with pushdown-friendly layout
     registry.py   query-key -> (callable, oracle SQL) registry (driver contract)
+    scratch.py    .tmp space: per-call directories + write-once artifacts
     operators/    scans, projections, joins, aggregates, windows, setops
     functions/    scalar families + determinism helpers
     kernels/      pandas-UDF/UDAF kernels (geomedian, frac cover, wofs)

@@ -37,10 +37,10 @@ def fanout(obj: SparkSession | DataFrame) -> int:
     constant"): ``defaultParallelism`` == the master's core count on
     ``local[N]`` and total executor cores on a cluster, so the
     single-file-input fan-outs and the distributed prefix-sum stages
-    track the box they run on instead of the literal 32 this VM happened
-    to have.  The driver's lower-core bench run gets fewer, fuller
-    partitions; a real cluster gets its own width; on this box the value
-    IS 32, so bench numbers stay comparable.
+    track the box they run on instead of a literal core count.  A
+    lower-core run gets fewer, fuller partitions and a real cluster gets
+    its own width, never fewer than the configured shuffle width (the
+    floor below).
 
     Result-invariance contract (why the count is a free parameter at
     every call site): round-robin/hash fan-outs feed order-insensitive
@@ -57,47 +57,13 @@ def fanout(obj: SparkSession | DataFrame) -> int:
     allocation, ``defaultParallelism`` at plan-build time reflects only
     the executors registered SO FAR (can be a handful at startup), not
     the steady-state width — so the configured shuffle width acts as a
-    floor.  On local[N] both values are N (the driver's lower-core bench
-    runs see the same number either way), so graded plans are unchanged."""
+    floor.  On local[N] the result is max(N, shuffle width)."""
     spark = obj if isinstance(obj, SparkSession) else obj.sparkSession
     try:
         shuffle_w = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):
         shuffle_w = 1  # non-numeric (unbound AQE form): defer to defaultParallelism
     return max(spark.sparkContext.defaultParallelism, shuffle_w)
-
-
-def fixture_tag(sf_dir: str, table: str = "lineitem") -> str:
-    """Cache tag for write-once ``.tmp`` artifacts derived from a fixture
-    table: sanitized ``sf_dir`` + a fingerprint of the table's parquet
-    bytes (total size + newest mtime).  A tag keyed on ``sf_dir`` alone
-    silently serves STALE derived artifacts after the fixture is
-    regenerated in place — with five graded graph keys reading one edge
-    artifact, that's five wrong-answer rows from one refresh.  Folding
-    the fingerprint in makes regeneration invalidate the cache (the old
-    directory is simply never matched again; ``.tmp`` is scratch)."""
-    import hashlib
-    import os
-    import re
-
-    base = re.sub(r"\W+", "_", sf_dir.strip("/"))
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    size = 0
-    mtime = 0
-    try:
-        if os.path.isdir(path):
-            for root, _dirs, files in os.walk(path):
-                for fn in files:
-                    st = os.stat(os.path.join(root, fn))
-                    size += st.st_size
-                    mtime = max(mtime, st.st_mtime_ns)
-        else:
-            st = os.stat(path)
-            size, mtime = st.st_size, st.st_mtime_ns
-    except OSError:
-        pass  # missing fixture: tag degrades to sf_dir-only, load() will fail loudly anyway
-    fp = hashlib.md5(f"{size}:{mtime}".encode()).hexdigest()[:10]
-    return f"{base}_{fp}"
 
 
 def table_rows(sf_dir: str, table: str) -> int:

@@ -31,7 +31,6 @@ from __future__ import annotations
 
 import struct
 from collections.abc import Iterator
-from pathlib import Path
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -39,6 +38,7 @@ from pyspark.sql import functions as F
 
 from ..io import load
 from ..registry import register
+from ..scratch import fresh
 
 _TW, _TH = 24, 15  # scene raster: x = min(floor(value/25), 23), y = floor(user_id/100)
 _SCALE = (25.0, 100.0, 0.0)  # ModelPixelScale: cell size in model units
@@ -259,9 +259,9 @@ def sink_geotiff_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoded = cells.groupBy("event_type").applyInPandas(
         _encode_scenes, "event_type string, payload binary"
     )
-    store = Path(__file__).resolve().parents[2] / ".tmp" / "geotiff_store"
-    encoded.write.mode("overwrite").parquet(str(store))
-    return spark.read.parquet(str(store)).mapInPandas(
+    store = str(fresh("geotiff_store"))
+    encoded.write.mode("overwrite").parquet(store)
+    return spark.read.parquet(store).mapInPandas(
         _decode_scenes,
         schema=(
             "event_type string, width int, height int, n_strips int,"

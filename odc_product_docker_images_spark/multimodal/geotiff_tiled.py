@@ -31,7 +31,6 @@ from __future__ import annotations
 import struct
 import zlib
 from collections.abc import Iterator
-from pathlib import Path
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -39,6 +38,7 @@ from pyspark.sql import functions as F
 
 from ..io import load
 from ..registry import register
+from ..scratch import fresh
 from .geotiff import _DOUBLE, _LONG, _SHORT, geokeys, pack_ifd, parse_ifd
 
 _W, _H = 48, 32  # scene raster; multiples of the tile edge by construction
@@ -224,9 +224,9 @@ def sink_geotiff_tiled(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoded = cells.groupBy("event_type").applyInPandas(
         _encode_scenes, "event_type string, payload binary"
     )
-    store = Path(__file__).resolve().parents[2] / ".tmp" / "geotiff_tiled_store"
-    encoded.write.mode("overwrite").parquet(str(store))
-    return spark.read.parquet(str(store)).mapInPandas(
+    store = str(fresh("geotiff_tiled_store"))
+    encoded.write.mode("overwrite").parquet(store)
+    return spark.read.parquet(store).mapInPandas(
         _decode_scenes,
         schema=(
             "event_type string, width int, height int, n_tiles int,"

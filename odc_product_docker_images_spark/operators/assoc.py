@@ -13,14 +13,13 @@ otherwise re-run the distinct per consumer.
 
 from __future__ import annotations
 
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.det import dround, sql_dround
-from ..io import fixture_tag, load
+from ..io import load
 from ..registry import register
+from ..scratch import artifact, fixture_tag
 
 _MIN_SUPPORT = 3  # absolute basket count (63 surviving rules at sf0.01)
 
@@ -65,19 +64,17 @@ def agg_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the basket grid is bounded by basket size × basket count
     and the pair table by the support threshold — the standard Apriori
     scaling argument."""
-    tag = fixture_tag(sf_dir)
-    grid_path = Path(__file__).resolve().parents[2] / ".tmp" / f"basket_grid_{tag}"
-    if not (grid_path / "_SUCCESS").exists():
-        lf = load(spark, sf_dir, "lineitem")
+
+    def build(path: str) -> None:
         (
-            lf.select(
-                F.col("l_orderkey").alias("basket"), F.col("l_partkey").alias("item")
-            )
+            load(spark, sf_dir, "lineitem")
+            .select(F.col("l_orderkey").alias("basket"), F.col("l_partkey").alias("item"))
             .distinct()
             .write.mode("overwrite")
-            .parquet(str(grid_path))
+            .parquet(path)
         )
-    grid = spark.read.parquet(str(grid_path))
+
+    grid = spark.read.parquet(artifact("basket_grid", build, fixture_tag(sf_dir)))
     # r12 (guide §2.1/§3.4): the pair stage was a basket self-join that
     # consumed the grid TWICE and the item marginals re-aggregated once
     # per join side — 5 grid scans per run.  Baskets are bounded (order

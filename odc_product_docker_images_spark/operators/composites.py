@@ -15,8 +15,6 @@ These are the patterns a 100 TB deployment leans on daily:
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -221,50 +219,23 @@ def stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     discards rows whose window closed under it, and append-mode emission
     keeps only windows the final watermark closed.  All three T4 rules
     (lag, drop, emit) are hash-gated, not just the surviving row count."""
-    from pathlib import Path
-
+    from ..scratch import fresh
     from ..streaming import streams as S
 
-    feed = Path(__file__).resolve().parents[2] / ".tmp" / f"wm_{uuid.uuid4().hex[:8]}"
-    feed.mkdir(parents=True, exist_ok=True)
-
-    def write(idx: int, rows: list[tuple[int, str, float]]) -> None:
-        # shared atomic writer: pinned mtimes fix replay order; temp+rename
-        # keeps the running source from listing a half-written footer
-        S.write_feed_file(
-            str(feed), idx, [(r[0], 1, r[1], "click", r[2]) for r in rows]
-        )
-
-    stream = S.events_stream(spark, str(feed))
-    agg = S.tumbling_counts(stream, watermark="10 minutes")
-    name = "wm_key_" + uuid.uuid4().hex[:6]
-    with S.small_state(spark):  # state partitions sized to the demo feed
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .start()
-        )
-        # files must ARRIVE while the query runs: pre-discovered files are
-        # planned against the initial (epoch-0) watermark, so a 'late' row
-        # in a pre-existing file is NOT dropped — real arrival order is
-        # what the watermark semantics key off (verified empirically; see
-        # git history)
-        write(
-            0,
-            [
-                (1, "2024-01-01T10:00:00", 1.0),
-                (2, "2024-01-01T10:20:00", 2.0),
-                (3, "2024-01-01T10:40:00", 3.0),
-            ],
-        )
-        q.processAllAvailable()  # watermark → 10:30
-        write(1, [(4, "2024-01-01T09:00:00", 99.0)])  # late: window closed at 10:30
-        q.processAllAvailable()  # dropped
-        write(2, [(5, "2024-01-01T12:30:00", 1.0)])  # watermark → 12:20
-        q.processAllAvailable()  # closes [10:00,11:00) — the only emitted row
-        q.stop()
-    return spark.table(name).select("w_start", "event_type", "n", "sum_value")
+    feed = str(fresh("wm"))
+    # files must ARRIVE while the query runs: pre-discovered files are
+    # planned against the initial (epoch-0) watermark, so a 'late' row in
+    # a pre-existing file is NOT dropped — real arrival order is what the
+    # watermark semantics key off
+    agg = S.tumbling_counts(S.events_stream(spark, feed), watermark="10 minutes")
+    sink = S.drain_to_memory(spark, agg, "append", feed, [
+        [(1, 1, "2024-01-01T10:00:00", "click", 1.0),
+         (2, 1, "2024-01-01T10:20:00", "click", 2.0),
+         (3, 1, "2024-01-01T10:40:00", "click", 3.0)],  # watermark → 10:30
+        [(4, 1, "2024-01-01T09:00:00", "click", 99.0)],  # late: window closed at 10:30
+        [(5, 1, "2024-01-01T12:30:00", "click", 1.0)],  # watermark → 12:20 closes [10:00,11:00)
+    ])
+    return sink.select("w_start", "event_type", "n", "sum_value")
 
 
 # stream_stream_join moved to streaming/stream_joins.py (graduated to a

@@ -22,14 +22,13 @@ the mechanism is visible and testable:
 
 from __future__ import annotations
 
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.det import dsum_fast, sql_dsum
-from ..io import fixture_tag, load
+from ..io import load
 from ..registry import register
+from ..scratch import artifact, fixture_tag
 
 # Bloom geometry: 1024 words x 64 bits = 65_536 bits, k=2 hash probes.
 # Urgent orders at sf0.01 ~= 3k keys -> ~21 bits/key -> FP rate ~0.8%;
@@ -146,18 +145,18 @@ def join_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: the dim is a literal encoding ``era='modern' ⇔ year ∈
     {1999,2000,2001}``, so the SQL twin is the direct year predicate.
     """
-    tag = fixture_tag(sf_dir)
-    part_path = Path(__file__).resolve().parents[2] / ".tmp" / f"dpp_lineitem_{tag}"
-    if not (part_path / "_SUCCESS").exists():
-        li = load(spark, sf_dir, "lineitem")
+
+    def build(path: str) -> None:
         (
-            li.withColumn("ship_year", F.year("l_shipdate"))
+            load(spark, sf_dir, "lineitem")
+            .withColumn("ship_year", F.year("l_shipdate"))
             .repartition("ship_year")
             .write.mode("overwrite")
             .partitionBy("ship_year")
-            .parquet(str(part_path))
+            .parquet(path)
         )
-    fact = spark.read.parquet(str(part_path))
+
+    fact = spark.read.parquet(artifact("dpp_lineitem", build, fixture_tag(sf_dir)))
     year_dim = spark.createDataFrame(
         [(y, "modern" if y in _PRUNE_YEARS else "legacy") for y in range(1995, 2002)],
         "dim_year INT, era STRING",

@@ -12,14 +12,13 @@ when the table is laid out ``partitionBy(time_key)``.
 
 from __future__ import annotations
 
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.det import davg, dround, dsum, sql_davg, sql_dround, sql_dsum
 from ..io import load, write_partitioned
 from ..registry import register
+from ..scratch import fresh
 
 
 @register(
@@ -230,16 +229,13 @@ def source_tile_scan_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixel values and flips the hash row.  Per-tile decode tasks are
     independent executors reads — the Datacube.load / GDAL fan-out
     shape; at 100 TB the blob dir is the object bucket."""
-    from pathlib import Path
-
     from ..sources.tile_source import ensure_tiff_tiles, register_tile_source
 
-    blob_dir = Path(__file__).resolve().parents[2] / ".tmp" / "tiff_tiles"
-    ensure_tiff_tiles(str(blob_dir))
+    blob_dir = ensure_tiff_tiles(tiles=4, tile_size=32)
     register_tile_source(spark)
     px = (
         spark.read.format("tiff_tiles")
-        .option("path", str(blob_dir))
+        .option("path", blob_dir)
         .option("tiles", "4")
         .option("tile_size", "32")
         .load()
@@ -447,12 +443,12 @@ def sink_partitioned_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem partitioned by ship_year (directory layout = the pruning
     index, mode=overwrite = idempotent-by-key) then RE-READS and aggregates
     per partition, so the oracle checks the full write→read path."""
-    out = Path(__file__).resolve().parents[2] / ".tmp" / "sink_demo"
+    out = str(fresh("sink_demo"))
     lf = load(spark, sf_dir, "lineitem").withColumn(
         "ship_year", F.year("l_shipdate").cast("int")
     )
-    write_partitioned(lf, str(out), ["ship_year"])
-    back = spark.read.parquet(str(out))
+    write_partitioned(lf, out, ["ship_year"])
+    back = spark.read.parquet(out)
     return back.groupBy("ship_year").agg(
         F.count(F.lit(1)).alias("n"),
         F.countDistinct("l_suppkey").alias("n_supps"),

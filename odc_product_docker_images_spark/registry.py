@@ -229,9 +229,9 @@ def _ensure_loaded() -> None:
     for mod in _MODULES:
         try:
             importlib.import_module(mod)
-        except ModuleNotFoundError:
-            # module not built yet (incremental rounds) — registry stays partial
-            pass
+        except ImportError as e:
+            e.add_note(f"while loading registry module {mod}")
+            raise
     _loaded = True
 
 

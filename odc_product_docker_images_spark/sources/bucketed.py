@@ -15,15 +15,14 @@ cheap next to moving n rows).  The only shuffle left in the plan is the
 final rollup's.
 
 Bucketed writes require the table catalog (path-based parquet cannot
-record bucket metadata), so the tables are EXTERNAL — data lives under
-the repo's ``.tmp`` scratch, content-addressed by fixture dir; the
-catalog entry is per-session and rebuilt on demand.
+record bucket metadata), so the tables are EXTERNAL — data lives in a
+``scratch.fresh`` directory written once per session, alongside the
+per-session catalog entry.
 """
 
 from __future__ import annotations
 
 import hashlib
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,28 +30,25 @@ from pyspark.sql import functions as F
 from ..functions.det import dsum, sql_dsum
 from ..io import load
 from ..registry import register
+from ..scratch import fresh
 
 # 32 = the local core budget: bucket count bounds the parallelism of every
 # shuffle-free consumer (bucket = partition), so fewer buckets than cores
 # leaves cores idle.  On a cluster this is sized to O(total cores).
 _BUCKETS = 32
-_SCRATCH = Path(__file__).resolve().parents[2] / ".tmp" / "bucketed"
 
 
 def _ensure_bucketed(
     spark: SparkSession, sf_dir: str, table: str, key: str
 ) -> str:
-    """Create (once per fixture dir) an external bucketed copy of a fixture
-    table; returns the catalog name.  Idempotent: keyed by sf_dir hash, the
-    data directory survives across sessions and the catalog entry is
-    re-registered cheaply when only the session is new."""
+    """Create (once per session and fixture dir) an external bucketed copy
+    of a fixture table; returns the catalog name."""
     # the tag must carry EVERY layout degree of freedom — same table
     # bucketed by a different key or count is a different physical table
     # (a collision here silently hands a consumer data clustered on the
     # wrong key, which breaks bucket=group co-location, not just speed)
     tag = hashlib.md5(f"{sf_dir}:{table}:{key}:{_BUCKETS}".encode()).hexdigest()[:8]
     name = f"bkt_{table}_{tag}"
-    path = _SCRATCH / name
     if not spark.catalog.tableExists(name):
         (
             load(spark, sf_dir, table)
@@ -63,7 +59,7 @@ def _ensure_bucketed(
             .repartition(_BUCKETS, F.col(key))
             .write.bucketBy(_BUCKETS, key)
             .sortBy(key)
-            .option("path", str(path))
+            .option("path", str(fresh(name)))
             .mode("overwrite")
             .format("parquet")
             .saveAsTable(name)

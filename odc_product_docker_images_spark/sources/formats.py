@@ -21,9 +21,6 @@ Production rules demonstrated here, stated once:
 
 from __future__ import annotations
 
-import uuid
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -31,8 +28,8 @@ from pyspark.sql import types as T
 from ..functions.det import dsum, sql_dsum
 from ..io import load
 from ..registry import register
+from ..scratch import fresh
 
-_TMP = Path(__file__).resolve().parent.parent.parent / ".tmp"
 _TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 
 _SCHEMA = T.StructType(
@@ -82,7 +79,7 @@ def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct users) against the parquet source of truth via the oracle.
     A dropped micro, a locale-formatted float, or a header/schema slip
     breaks the value hash."""
-    out = str(_TMP / f"csv_{uuid.uuid4().hex[:8]}")
+    out = str(fresh("csv"))
     _subset(spark, sf_dir).write.mode("overwrite").option("header", "true").option(
         "timestampFormat", _TS_FMT
     ).csv(out)
@@ -102,7 +99,7 @@ def source_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexes).  Schema is explicit on read; JSON adds the field-order and
     null-omission hazards CSV doesn't have, and the identical oracle
     pins them."""
-    out = str(_TMP / f"jsonl_{uuid.uuid4().hex[:8]}")
+    out = str(fresh("jsonl"))
     _subset(spark, sf_dir).write.mode("overwrite").option(
         "timestampFormat", _TS_FMT
     ).json(out)
@@ -124,7 +121,7 @@ def source_fixed_width_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     substring/trim/cast riding the text scan.  Same verification
     aggregate and oracle as the CSV/JSONL keys: a one-byte offset slip
     or a truncated float breaks the value hash."""
-    out = str(_TMP / f"fw_{uuid.uuid4().hex[:8]}")
+    out = str(fresh("fw"))
     # Field widths are int64-PROOF: Spark's lpad silently TRUNCATES a
     # value longer than the field (the r11 100x slice caught an 8-char
     # user_id field collapsing 150k 9-digit replica ids into 27k
@@ -180,7 +177,7 @@ def profile_parquet_footers(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the storage layer."""
     import pandas as pd  # Arrow path only
 
-    out = _TMP / f"footers_{uuid.uuid4().hex[:8]}"
+    out = fresh("footers")
     ev = load(spark, sf_dir, "events").select(
         "event_id",
         "value",

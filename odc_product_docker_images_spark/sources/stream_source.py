@@ -19,7 +19,6 @@ OWNS end to end.
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
@@ -139,16 +138,8 @@ def source_stream_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sensor", "n", exact_double(F.col("dec_sum")).alias("sum_value"), "n_batches"
         )
     )
-    name = "feed_" + uuid.uuid4().hex[:6]
-    with S.small_state(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .start()
-        )
-        # the high-water mark advances 2 arrivals per poll, so this drains
-        # the horizon in 3 REAL micro-batches, then idles and returns
-        q.processAllAvailable()
-        q.stop()
-    return spark.table(name).select("sensor", "n", "sum_value", "n_batches")
+    # the high-water mark advances 2 arrivals per poll, so the drain runs
+    # the horizon in 3 REAL micro-batches, then idles and returns
+    return S.drain_to_memory(spark, agg, "complete").select(
+        "sensor", "n", "sum_value", "n_batches"
+    )

@@ -81,27 +81,27 @@ def _tile_band_raster(tile_x: int, tile_y: int, n: int, band: str):
     return ((y * 13 + x * 41) % 255).astype(np.uint16)
 
 
-def ensure_tiff_tiles(blob_dir: str, tiles: int = 4, tile_size: int = 32) -> None:
-    """Write-once TIFF blob store: one striped classic GeoTIFF per
-    (tile, band), encoded by the ``multimodal/geotiff.py`` writer from
-    the deterministic formula.  Pure-Python fixture generation (no Spark
-    job; the pr_edges write-once pattern) — a real deployment points the
+def ensure_tiff_tiles(tiles: int = 4, tile_size: int = 32) -> str:
+    """Write-once TIFF blob store; returns its directory.  One striped
+    classic GeoTIFF per (tile, band), encoded by the
+    ``multimodal/geotiff.py`` writer from the deterministic formula.
+    Pure-Python fixture generation (no Spark job; a ``scratch.artifact``
+    tagged by the generation parameters) — a real deployment points the
     source at the object bucket instead."""
     from pathlib import Path
 
     from ..multimodal.geotiff import _pack_tiff
+    from ..scratch import artifact
 
-    d = Path(blob_dir)
-    done = d / "_SUCCESS"
-    if done.exists():
-        return
-    d.mkdir(parents=True, exist_ok=True)
-    for tx in range(tiles):
-        for ty in range(tiles):
-            for band in ("red", "nir"):
-                raster = _tile_band_raster(tx, ty, tile_size, band)
-                (d / f"tile_{tx}_{ty}_{band}.tif").write_bytes(_pack_tiff(raster))
-    done.touch()
+    def build(path: str) -> None:
+        d = Path(path)
+        for tx in range(tiles):
+            for ty in range(tiles):
+                for band in ("red", "nir"):
+                    raster = _tile_band_raster(tx, ty, tile_size, band)
+                    (d / f"tile_{tx}_{ty}_{band}.tif").write_bytes(_pack_tiff(raster))
+
+    return artifact("tiff_tiles", build, f"{tiles}x{tile_size}")
 
 
 class TiffTileReader(DataSourceReader):

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from ..functions.det import dsum, sql_dsum
 from ..io import load
 from ..registry import register
+from ..scratch import fresh
 
 
 class VersionedTable:
@@ -523,8 +524,7 @@ class VersionedTable:
 
 
 def _fresh_table(prefix: str) -> VersionedTable:
-    base = Path(__file__).resolve().parents[2] / ".tmp" / f"{prefix}_{uuid.uuid4().hex[:8]}"
-    return VersionedTable(str(base))
+    return VersionedTable(str(fresh(prefix)))
 
 
 @register(
@@ -934,7 +934,7 @@ def table_clone_shallow(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events").select("event_id", "value")
     src = _fresh_table("clsrc")
     src.write(ev.repartitionByRange(8, "event_id"), mode="overwrite")
-    dest = src.clone_shallow(str(src.path.parent / f"{src.path.name}_clone"))
+    dest = src.clone_shallow(str(fresh("clclone")))
     upd = ev.where((F.col("event_id") < 1000) & (F.col("event_id") % 2 == 0)).select(
         "event_id", (F.col("value") + 1000).alias("value")
     )

@@ -12,14 +12,13 @@ aggregation logic the stream runs incrementally.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.det import dsum, sql_dsum
 from ..io import load
 from ..registry import register
+from ..scratch import fresh
 
 
 @register(
@@ -203,45 +202,18 @@ def stream_stateful_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly.  The state machine's semantics, not just its row count, are
     hash-gated (the feed values are small binary-exact doubles, so the
     running sums carry no float-order ambiguity)."""
-    import uuid
-    from pathlib import Path
-
     from . import streams as S
 
-    feed = Path(__file__).resolve().parents[2] / ".tmp" / f"ledger_{uuid.uuid4().hex[:8]}"
-    feed.mkdir(parents=True, exist_ok=True)  # source dir must exist at plan time
-    name = "ledger_" + uuid.uuid4().hex[:6]
-    totals = S.stateful_running_totals(S.events_stream(spark, str(feed)))
-    with S.small_state(spark):  # state partitions sized to the demo feed
-        q = (
-            totals.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .start()
-        )
-        # files must ARRIVE between processAllAvailable calls to pin the
-        # micro-batch boundaries (pre-existing files plan as one batch)
-        S.write_feed_file(
-            str(feed),
-            0,
-            [
-                (1, 1, "2024-01-01T10:00:00", "click", 1.0),
-                (2, 1, "2024-01-01T10:05:00", "click", 2.0),
-                (3, 2, "2024-01-01T10:10:00", "view", 5.0),
-            ],
-        )
-        q.processAllAvailable()
-        S.write_feed_file(
-            str(feed),
-            1,
-            [
-                (4, 1, "2024-01-01T11:00:00", "click", 1.0),
-                (5, 3, "2024-01-01T11:05:00", "purchase", 7.0),
-            ],
-        )
-        q.processAllAvailable()
-        q.stop()
-    return spark.table(name).select("user_id", "n_events", "total_value")
+    feed = str(fresh("ledger"))
+    totals = S.stateful_running_totals(S.events_stream(spark, feed))
+    sink = S.drain_to_memory(spark, totals, "update", feed, [
+        [(1, 1, "2024-01-01T10:00:00", "click", 1.0),
+         (2, 1, "2024-01-01T10:05:00", "click", 2.0),
+         (3, 2, "2024-01-01T10:10:00", "view", 5.0)],
+        [(4, 1, "2024-01-01T11:00:00", "click", 1.0),
+         (5, 3, "2024-01-01T11:05:00", "purchase", 7.0)],
+    ])
+    return sink.select("user_id", "n_events", "total_value")
 
 
 @register(
@@ -266,12 +238,9 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     FULL oracle (r3): the read-back rollup is SQL over the literal feed —
     the sink path (partitioned write + partition-discovery read) is now
     value-hash-gated end to end, not just row-counted."""
-    import uuid
-    from pathlib import Path
-
     from . import streams as S
 
-    base = Path(__file__).resolve().parents[2] / ".tmp" / f"fbs_{uuid.uuid4().hex[:8]}"
+    base = fresh("fbs")
     feed, out, ckpt = base / "feed", base / "out", base / "ckpt"
     S.write_feed_file(
         str(feed),
@@ -318,12 +287,10 @@ def stream_table_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle over the whole events table — the streaming path lost nothing.
     The final rollup is commit-order-independent (count + exact decimal
     sum), so file arrival order can't flake the hash."""
-    from pathlib import Path
-
     from ..sources.versioned import VersionedTable
     from . import streams as S
 
-    root = Path(__file__).resolve().parents[2] / ".tmp" / f"sti_{uuid.uuid4().hex[:8]}"
+    root = fresh("sti")
     stage, ckpt = root / "stage", root / "ckpt"
     S.stage_events_dir(spark, sf_dir, str(stage), n_files=4)
     t = VersionedTable(str(root / "table"))
@@ -371,12 +338,12 @@ def stream_available_now(spark: SparkSession, sf_dir: str) -> DataFrame:
     Decimal-cast sums keep the incrementally-folded state bit-identical to
     the one-shot aggregation regardless of file arrival order."""
     import shutil
-    from pathlib import Path
+    import uuid
 
     from ..functions.det import dec_cast, exact_double
     from ..streaming import streams as S
 
-    root = Path(__file__).resolve().parents[2] / ".tmp" / f"avn_{uuid.uuid4().hex[:8]}"
+    root = fresh("avn")
     stage, feed, ckpt = root / "stage", root / "feed", root / "ckpt"
     S.stage_events_dir(spark, sf_dir, str(stage), n_files=4)
     feed.mkdir(parents=True, exist_ok=True)

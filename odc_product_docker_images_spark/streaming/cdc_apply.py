@@ -15,13 +15,11 @@ over the full change history.
 
 from __future__ import annotations
 
-import uuid
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ..scratch import fresh
 from ..sources.versioned import VersionedTable
 from . import streams as S
 
@@ -63,7 +61,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     size.  The oracle replays the full change history relationally
     (latest-write-wins ``arg_max``), which is precisely the semantics the
     streaming apply must converge to."""
-    base = Path(__file__).resolve().parents[2] / ".tmp" / f"cdca_{uuid.uuid4().hex[:8]}"
+    base = fresh("cdca")
     feed, ckpt = base / "feed", base / "ckpt"
     t = VersionedTable(str(base / "table"))
     t.write(

@@ -28,14 +28,12 @@ for users 1, 2, 3; the user-4 session remains open at shutdown).
 
 from __future__ import annotations
 
-import uuid
-from pathlib import Path
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..registry import register
+from ..scratch import fresh
 
 _GAP_MS = 30 * 60 * 1000  # 30 min session gap
 
@@ -145,11 +143,9 @@ def stream_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     row is immutable — the contract downstream ledgers need."""
     from . import streams as S
 
-    feed = Path(__file__).resolve().parents[2] / ".tmp" / f"sesto_{uuid.uuid4().hex[:8]}"
-    feed.mkdir(parents=True, exist_ok=True)
-    name = "sesto_" + uuid.uuid4().hex[:6]
+    feed = str(fresh("sesto"))
     sessions = (
-        S.events_stream(spark, str(feed))
+        S.events_stream(spark, feed)
         .withWatermark("ts", "10 minutes")
         .select("user_id", "ts", "value")
         .groupBy("user_id")
@@ -161,28 +157,13 @@ def stream_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
-    with S.small_state(spark):
-        q = (
-            sessions.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .start()
-        )
-        S.write_feed_file(
-            str(feed),
-            0,
-            [
-                (1, 1, "2024-01-01T10:00:00", "click", 1.0),
-                (2, 1, "2024-01-01T10:10:00", "click", 2.0),
-                (3, 2, "2024-01-01T10:05:00", "view", 5.0),
-            ],
-        )
-        q.processAllAvailable()
-        S.write_feed_file(str(feed), 1, [(4, 3, "2024-01-01T12:00:00", "click", 7.0)])
-        q.processAllAvailable()
-        S.write_feed_file(str(feed), 2, [(5, 4, "2024-01-01T13:30:00", "view", 9.0)])
-        q.processAllAvailable()
-        q.stop()
-    return spark.table(name).select(
+    sink = S.drain_to_memory(spark, sessions, "append", feed, [
+        [(1, 1, "2024-01-01T10:00:00", "click", 1.0),
+         (2, 1, "2024-01-01T10:10:00", "click", 2.0),
+         (3, 2, "2024-01-01T10:05:00", "view", 5.0)],
+        [(4, 3, "2024-01-01T12:00:00", "click", 7.0)],
+        [(5, 4, "2024-01-01T13:30:00", "view", 9.0)],
+    ])
+    return sink.select(
         "user_id", "session_start", "session_end", "n_events", "sum_value"
     )

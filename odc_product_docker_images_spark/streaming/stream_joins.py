@@ -18,13 +18,11 @@ state to ~40 minutes of clicks per user shard, independent of stream age.
 
 from __future__ import annotations
 
-import uuid
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ..scratch import fresh
 
 
 @register(
@@ -46,15 +44,12 @@ def stream_stream_join_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     interval join (module docstring)."""
     from . import streams as S
 
-    feed = Path(__file__).resolve().parents[2] / ".tmp" / f"ssj_{uuid.uuid4().hex[:8]}"
-    S.stage_events_dir(spark, sf_dir, str(feed), n_files=1)
-    stream = S.events_stream(spark, str(feed))
+    feed = S.stage_events_dir(spark, sf_dir, str(fresh("ssj")), n_files=1)
+    stream = S.events_stream(spark, feed)
     joined = S.stream_stream_join(
         stream.where(F.col("event_type") == "click"),
         stream.where(F.col("event_type") == "purchase"),
     )
-    name = "ssj_" + uuid.uuid4().hex[:6]
-    q = joined.writeStream.format("memory").queryName(name).outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
-    return spark.table(name).select("p_id", "p_user", "p_ts", "p_value", "c_ts", "click_value")
+    return S.drain_to_memory(spark, joined, "append").select(
+        "p_id", "p_user", "p_ts", "p_value", "c_ts", "click_value"
+    )

@@ -17,7 +17,8 @@ semantics — the exact shape of a scene-backlog reprocessing job.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import uuid
+from collections.abc import Iterator, Sequence
 from contextlib import contextmanager
 from typing import Any
 
@@ -99,7 +100,7 @@ def write_feed_file(
     )
     # write under a temp name, pin mtime, THEN rename: the running
     # FileStreamSource lists the directory concurrently and must never see
-    # a half-written footer (".tmp"-suffixed files it would also pick up,
+    # a half-written footer (it would also pick up a temp-suffixed name,
     # so the temp name carries no parquet extension and a leading dot)
     path = Path(feed_dir) / f"{idx:02d}.parquet"
     tmp = Path(feed_dir) / f".{idx:02d}.inprogress"
@@ -205,17 +206,31 @@ def stateful_running_totals(stream: DataFrame) -> DataFrame:
     )
 
 
-def run_to_memory(sdf: DataFrame, name: str, output_mode: str = "append"):
-    """Drive a streaming DF to a memory sink until input is exhausted;
-    returns the query (caller reads ``spark.table(name)``)."""
-    q = (
-        sdf.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .start()
-    )
-    q.processAllAvailable()
-    return q
+def drain_to_memory(
+    spark: SparkSession,
+    sdf: DataFrame,
+    output_mode: str,
+    feed_dir: str | None = None,
+    batches: Sequence[list[tuple[int, int, str, str, float]]] = (),
+) -> DataFrame:
+    """Run ``sdf`` into a memory sink under ``small_state`` and return the
+    sink table.  The query first drains whatever its source already holds;
+    then each of ``batches`` lands in ``feed_dir`` (``write_feed_file``)
+    and is drained before the next — files must ARRIVE between
+    ``processAllAvailable`` calls to pin micro-batch boundaries, since
+    pre-existing files are planned as one batch at the epoch-0 watermark.
+    The query is stopped even when a step raises."""
+    name = "mem_" + uuid.uuid4().hex[:8]
+    with small_state(spark):
+        q = sdf.writeStream.format("memory").queryName(name).outputMode(output_mode).start()
+        try:
+            q.processAllAvailable()
+            for idx, rows in enumerate(batches):
+                write_feed_file(feed_dir, idx, rows)
+                q.processAllAvailable()
+        finally:
+            q.stop()
+    return spark.table(name)
 
 
 def foreach_batch_sink(stream: DataFrame, out_path: str, checkpoint: str):

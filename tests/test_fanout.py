@@ -21,11 +21,15 @@ PKG = Path(__file__).resolve().parent.parent / "odc_product_docker_images_spark"
 def test_fanout_tracks_default_parallelism(spark):
     from odc_product_docker_images_spark.io import fanout
 
-    # local[N]: defaultParallelism (32) >= the test session's shuffle
-    # width (8), so the r13 floor changes nothing here
-    assert fanout(spark) == spark.sparkContext.defaultParallelism
-    df = spark.range(1)
-    assert fanout(df) == spark.sparkContext.defaultParallelism
+    # the contract is max(defaultParallelism, shuffle width): on local[N]
+    # the shuffle-width floor decides whenever N is below the session's
+    # configured width
+    want = max(
+        spark.sparkContext.defaultParallelism,
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+    )
+    assert fanout(spark) == want
+    assert fanout(spark.range(1)) == want
 
 
 def test_fanout_floors_at_shuffle_width(spark):

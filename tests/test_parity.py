@@ -51,4 +51,6 @@ def test_registry_consistency():
     qs = registry.queries()
     os_ = registry.oracle_sql()
     assert set(os_) <= set(qs)
-    assert len(qs) >= 20 or True  # coverage grows per round
+    registering = {fn.__module__ for fn in qs.values()}
+    silent = [m for m in registry._MODULES if m not in registering]
+    assert not silent, f"registry modules that register no key: {silent}"

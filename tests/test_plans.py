@@ -5,9 +5,6 @@ engine relies on are pinned as tests."""
 from __future__ import annotations
 
 import re
-import shutil
-import uuid
-from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -69,27 +66,25 @@ def test_payload_column_pruned_on_metadata_rollup(spark):
     """Binary payload columns must not be read by metadata-only queries —
     the multimodal design's core pruning claim, checked on a real parquet
     file with a binary column."""
-    scratch = Path(__file__).resolve().parent.parent / ".tmp" / f"media_{uuid.uuid4().hex[:6]}"
-    try:
-        from odc_product_docker_images_spark.io import load
+    from odc_product_docker_images_spark.io import load
+    from odc_product_docker_images_spark.scratch import fresh
 
-        media = load(spark, SF, "documents").select(
-            "doc_id",
-            F.encode("text", "utf-8").alias("payload"),
-            F.col("source").alias("origin"),
-            F.col("n_chars").alias("content_length"),
-        )
-        media.write.mode("overwrite").parquet(str(scratch))
-        rollup = (
-            spark.read.parquet(str(scratch))
-            .groupBy("origin")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("content_length").alias("bytes"))
-        )
-        got = C.read_schema_columns(rollup)
-        assert "payload" not in got, f"metadata rollup reads payload bytes: {got}"
-        assert rollup.count() > 0
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+    scratch = str(fresh("media"))
+    media = load(spark, SF, "documents").select(
+        "doc_id",
+        F.encode("text", "utf-8").alias("payload"),
+        F.col("source").alias("origin"),
+        F.col("n_chars").alias("content_length"),
+    )
+    media.write.mode("overwrite").parquet(scratch)
+    rollup = (
+        spark.read.parquet(scratch)
+        .groupBy("origin")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("content_length").alias("bytes"))
+    )
+    got = C.read_schema_columns(rollup)
+    assert "payload" not in got, f"metadata rollup reads payload bytes: {got}"
+    assert rollup.count() > 0
 
 
 def test_approx_distinct_within_error(spark):

@@ -399,14 +399,12 @@ def test_fixed_width_lines_have_constant_width(spark):
     row byte-for-byte."""
     import glob
 
-    from odc_product_docker_images_spark.sources.formats import (
-        source_fixed_width_roundtrip,
-        _TMP,
-    )
+    from odc_product_docker_images_spark import scratch
+    from odc_product_docker_images_spark.sources.formats import source_fixed_width_roundtrip
 
-    before = set(glob.glob(str(_TMP / "fw_*")))
+    before = set(glob.glob(str(scratch.ROOT / "fw_*")))
     source_fixed_width_roundtrip(spark, SF).collect()
-    new = sorted(set(glob.glob(str(_TMP / "fw_*"))) - before)
+    new = sorted(set(glob.glob(str(scratch.ROOT / "fw_*"))) - before)
     assert new
     lines = []
     for f in glob.glob(new[-1] + "/*.txt"):

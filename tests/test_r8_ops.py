@@ -150,8 +150,7 @@ def test_tiff_tile_source_matches_synthetic_and_blob_spec(spark):
     }
     assert tiff == synth and len(tiff) == 64
 
-    blob_dir = Path("/root/repo/.tmp/tiff_tiles")
-    ensure_tiff_tiles(str(blob_dir))
+    blob_dir = Path(ensure_tiff_tiles())
     payload = (blob_dir / "tile_2_3_nir.tif").read_bytes()
     assert payload[:4] == b"II\x2a\x00"  # little-endian classic TIFF magic
     w, h, raster, ps, tp, _gk = _decode_tiff(payload)
@@ -481,21 +480,21 @@ def test_gmm_em_loop_matches_numpy_and_improves(spark):
     assert all(b >= a - 1e-6 for a, b in zip(lls, lls[1:]))  # EM monotone
 
 
-def _degen_dir(tmp_path_factory=None):
+def _degen_dir():
     """Pathological 1-2-row fixture (single user/day, constant values,
-    one embedding) — the degenerate-grain sweep's input.  Built once
-    under .tmp; every oracled key must run without raising on it (the
-    agg_cohort_decay_fit / agg_gamma_mom / sim_ann_ivf failure class)."""
-    import os
-    import shutil
+    one embedding) — the degenerate-grain sweep's input.  Built once as a
+    scratch artifact; every oracled key must run without raising on it
+    (the agg_cohort_decay_fit / agg_gamma_mom / sim_ann_ivf failure
+    class)."""
+    from conftest import SF_DIR
+    from odc_product_docker_images_spark.scratch import artifact, fixture_tag
 
+    return artifact("degen_sweep", lambda d: _write_degen(SF_DIR, d), fixture_tag(SF_DIR))
+
+
+def _write_degen(src: str, d: str) -> None:
     import duckdb
 
-    src = "/root/testdata/sf0.001"
-    d = "/root/repo/.tmp/degen_sweep"
-    if os.path.exists(os.path.join(d, "embeddings.parquet")):
-        return d
-    os.makedirs(d, exist_ok=True)
     con = duckdb.connect()
     specs = {
         t: f"SELECT * FROM read_parquet('{src}/{t}.parquet') LIMIT 1"
@@ -517,7 +516,6 @@ def _degen_dir(tmp_path_factory=None):
     )
     for t, q in specs.items():
         con.execute(f"COPY ({q}) TO '{d}/{t}.parquet' (FORMAT PARQUET)")
-    return d
 
 
 def test_ann_keys_survive_one_vector_corpus(spark):

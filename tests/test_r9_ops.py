@@ -23,30 +23,6 @@ def _edges_und():
     return edges, adj
 
 
-def test_fixture_tag_invalidates_on_regeneration(tmp_path):
-    """Write-once .tmp artifacts key their cache on io.fixture_tag; a
-    fixture regenerated in place (same path, new bytes/mtime) must
-    produce a DIFFERENT tag or five graded graph keys silently read
-    stale edges (r8 advice)."""
-    import os
-
-    from odc_product_docker_images_spark.io import fixture_tag
-
-    f = tmp_path / "lineitem.parquet"
-    f.write_bytes(b"v1-bytes")
-    t1 = fixture_tag(str(tmp_path))
-    assert t1.startswith(fixture_tag(str(tmp_path)).rsplit("_", 1)[0])
-    assert t1 == fixture_tag(str(tmp_path))  # stable while unchanged
-    # same size, newer mtime (in-place regeneration)
-    f.write_bytes(b"v2-bytes")
-    os.utime(f, ns=(os.stat(f).st_atime_ns, os.stat(f).st_mtime_ns + 10**9))
-    t2 = fixture_tag(str(tmp_path))
-    assert t2 != t1
-    # different size
-    f.write_bytes(b"v3-bytes-longer")
-    assert fixture_tag(str(tmp_path)) not in (t1, t2)
-
-
 def test_audit_slice_constants_match_pipeline_knuth():
     """The recall-gate oracles inline the Knuth multiplier as a literal
     (a top-level pipeline import would reorder tail registrations); pin

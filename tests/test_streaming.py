@@ -2,12 +2,11 @@
 
 Real streams against file sources + memory sinks: watermark late-drop,
 stateful dedup, sessionization, arbitrary state, and the foreachBatch
-partitioned sink.  Scratch space lives under the repo (gitignored).
+partitioned sink.  Scratch space comes from ``scratch.fresh``.
 """
 
 from __future__ import annotations
 
-import shutil
 import uuid
 from datetime import datetime
 from pathlib import Path
@@ -15,17 +14,13 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
+from odc_product_docker_images_spark.scratch import fresh
 from odc_product_docker_images_spark.streaming import streams as S
-
-SCRATCH = Path(__file__).resolve().parent.parent / ".tmp"
 
 
 @pytest.fixture()
 def scratch():
-    d = SCRATCH / uuid.uuid4().hex[:8]
-    d.mkdir(parents=True, exist_ok=True)
-    yield d
-    shutil.rmtree(d, ignore_errors=True)
+    return fresh("stest")
 
 
 def _write_file(spark, path: Path, rows: list[tuple]) -> None:
@@ -320,10 +315,6 @@ def test_session_timeout_splits_same_user_sessions(spark):
     """Review-found defect guard: the SAME user with two event bursts more
     than GAP apart must yield TWO finalized sessions, never one merged
     span (the scalar-state FSM folded them together)."""
-    import uuid as _uuid
-    from pathlib import Path
-
-    from odc_product_docker_images_spark.streaming import streams as S
     from odc_product_docker_images_spark.streaming.session_timeout import (
         _GAP_MS,
         _OUT_SCHEMA,
@@ -332,11 +323,9 @@ def test_session_timeout_splits_same_user_sessions(spark):
     )
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    feed = Path(__file__).resolve().parent.parent / ".tmp" / f"sesplit_{_uuid.uuid4().hex[:8]}"
-    feed.mkdir(parents=True, exist_ok=True)
-    name = "sesplit_" + _uuid.uuid4().hex[:6]
+    feed = str(fresh("sesplit"))
     sessions = (
-        S.events_stream(spark, str(feed))
+        S.events_stream(spark, feed)
         .withWatermark("ts", "10 minutes")
         .select("user_id", "ts", "value")
         .groupBy("user_id")
@@ -348,25 +337,16 @@ def test_session_timeout_splits_same_user_sessions(spark):
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
-    with S.small_state(spark):
-        q = (
-            sessions.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .start()
-        )
+    sink = S.drain_to_memory(spark, sessions, "append", feed, [
         # burst 1 at 10:00; burst 2 from the SAME user at 12:00 (gap 2h)
-        S.write_feed_file(str(feed), 0, [(1, 7, "2024-01-01T10:00:00", "click", 1.0)])
-        q.processAllAvailable()
-        S.write_feed_file(str(feed), 1, [(2, 7, "2024-01-01T12:00:00", "click", 2.0)])
-        q.processAllAvailable()
+        [(1, 7, "2024-01-01T10:00:00", "click", 1.0)],
+        [(2, 7, "2024-01-01T12:00:00", "click", 2.0)],
         # advance the watermark far past both closes
-        S.write_feed_file(str(feed), 2, [(3, 8, "2024-01-01T15:00:00", "view", 9.0)])
-        q.processAllAvailable()
-        q.stop()
+        [(3, 8, "2024-01-01T15:00:00", "view", 9.0)],
+    ])
     rows = sorted(
         (r["user_id"], str(r["session_start"]), str(r["session_end"]), r["n_events"], r["sum_value"])
-        for r in spark.table(name).collect()
+        for r in sink.collect()
     )
     assert rows == [
         (7, "2024-01-01 10:00:00", "2024-01-01 10:00:00", 1, 1.0),

@@ -4,7 +4,6 @@ compaction invariants (sources/versioned.py)."""
 from __future__ import annotations
 
 import json
-import uuid
 from pathlib import Path
 
 from pyspark.sql import functions as F
@@ -13,12 +12,12 @@ import pytest
 
 from conftest import SF_DIR
 
+from odc_product_docker_images_spark.scratch import fresh
 from odc_product_docker_images_spark.sources.versioned import VersionedTable
 
 
 def _table() -> VersionedTable:
-    base = Path(__file__).resolve().parent.parent / ".tmp" / f"vtest_{uuid.uuid4().hex[:8]}"
-    return VersionedTable(str(base))
+    return VersionedTable(str(fresh("vtest")))
 
 
 def test_commit_log_and_time_travel(spark):
@@ -296,7 +295,7 @@ def test_shallow_clone_shares_files_and_diverges(spark):
     src.write(df.repartitionByRange(4, "k"), mode="overwrite")
     before_rows = src.read(spark).count()
 
-    dest = src.clone_shallow(str(src.path.parent / f"{src.path.name}_c"))
+    dest = src.clone_shallow(str(fresh("vtest_c")))
     refs = dest._manifest(0)["files"]
     assert refs and all(".." in Path(f).parts for f in refs)  # zero copy
     assert not dest.data_dir.exists() or not list(dest.data_dir.rglob("*.parquet"))

@@ -29,9 +29,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pyspark.sql import functions as F
 
-from ..io import load, table_rows
+from ..io import load
 from ..registry import register
-from .geomedian import BANDS, weiszfeld_batched
+from .geomedian import BANDS, solve_partitions, weiszfeld_batched
 
 
 def mads_reference(X: np.ndarray, gm: np.ndarray) -> tuple[float, float, float]:
@@ -109,13 +109,9 @@ def agg_geomedian_mads(spark: SparkSession, sf_dir: str) -> DataFrame:
     stored-bucketed layout (``agg_geomedian_bucketed``) removes even that
     Exchange when the grid is stable across runs."""
     lf = load(spark, sf_dir, "lineitem")
-    # data-derived task sizing, same rule as agg_geomedian (r9): ~250k
-    # rows/task bounds the padded cube; floor 32 = the graded-scale plan.
-    # r13: the count comes from parquet footers (same integer, no Spark job)
-    parts = max(32, -(-table_rows(sf_dir, "lineitem") // 250_000))
     return (
         lf.select("l_suppkey", *BANDS)
-        .repartition(parts, "l_suppkey")
+        .repartition(solve_partitions(spark, sf_dir), "l_suppkey")
         .mapInPandas(_gmad_partition, schema=_SCHEMA)
     )
 

@@ -25,7 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load, table_rows
+from ..io import fanout, load, table_rows
 from ..registry import register
 
 BANDS = ["l_quantity", "l_discount", "l_tax"]
@@ -114,6 +114,18 @@ def _gm_partition(batches):
     yield pd.DataFrame(out)
 
 
+def solve_partitions(spark: SparkSession, sf_dir: str) -> int:
+    """Partition count of the hash-repartitioned geomedian solves: the
+    host's fan-out width, raised by a memory cap DERIVED from the data
+    (r9 kernel-memory discipline: ~250k rows per task keeps the padded
+    (G, n_max, d) cube plus the Weiszfeld temporaries well under 100 MB).
+    Every Python task pays a fixed start-up cost, so more tasks than the
+    host runs at once only add that cost; per-group results do not depend
+    on the count.  The row count comes from parquet footers (r13: same
+    integer as ``count()``, no Spark job)."""
+    return max(fanout(spark), -(-table_rows(sf_dir, "lineitem") // 250_000))
+
+
 _SCHEMA = (
     "l_suppkey long, n_obs long, "
     + ", ".join(f"gm_{b} double" for b in BANDS)
@@ -126,18 +138,12 @@ def agg_geomedian(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hash-repartition on the pixel key, so every group is whole within a
     partition), then ONE vectorized solve per partition over all of its
     groups via ``mapInPandas`` (the per-group ``applyInPandas`` form paid
-    a Python roundtrip per pixel).  Partition count bounds peak memory —
-    and is DERIVED from the data (r9 kernel-memory discipline: ~250k rows
-    per task keeps the padded (G, n_max, d) cube plus the Weiszfeld
-    temporaries well under 100 MB), never a fixture-tuned constant; the
-    floor of 32 keeps graded-scale plans byte-identical to the r1 form."""
+    a Python roundtrip per pixel).  ``solve_partitions`` sizes the
+    repartition from the host and the data."""
     lf = load(spark, sf_dir, "lineitem")
-    # r13 (guide §5): the sizing count comes from parquet footers — same
-    # integer as lf.count(), zero Spark jobs (was one full-scan job per run)
-    parts = max(32, -(-table_rows(sf_dir, "lineitem") // 250_000))
     return (
         lf.select("l_suppkey", *BANDS)
-        .repartition(parts, "l_suppkey")
+        .repartition(solve_partitions(spark, sf_dir), "l_suppkey")
         .mapInPandas(_gm_partition, schema=_SCHEMA)
     )
 

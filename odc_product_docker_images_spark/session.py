@@ -10,6 +10,8 @@ testing but every knob is the one you would tune on a 1000-executor cluster:
 - Arrow on: pandas-UDF kernels (geomedian, fractional cover) move batches
   JVM<->Python columnar, the analog of the reference's numpy-over-chunks.
 - UTC session timezone: fixtures are tz-naive; DuckDB oracles compare equal.
+- Python workers run under ``pyworker``, which removes a fixed CPU cost
+  from every Python task (zip directory re-reads on Python < 3.12).
 - shuffle.partitions: local default = cores; at cluster scale this is set
   ~2-3x total cores (or left to AQE's coalescing from a high initial value).
 """
@@ -17,6 +19,7 @@ testing but every knob is the one you would tune on a 1000-executor cluster:
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
@@ -47,6 +50,12 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        # workers fork from a daemon that stops every task re-reading the
+        # zips on the worker path (see pyworker.py); the package's parent
+        # on the worker path makes it, and the kernels pickled by
+        # reference, importable whatever the driver's working directory
+        .config("spark.python.daemon.module", f"{__package__}.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", str(Path(__file__).resolve().parents[1]))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

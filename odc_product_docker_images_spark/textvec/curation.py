@@ -67,7 +67,7 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     #   of n_shingles > 0: a filter over the builder expression gets
     #   pushed below the repartition and runs the builder SERIALLY on the
     #   single-partition scan;
-    # - repartition(32): single-file input = one partition otherwise;
+    # - repartition(fanout): single-file input = one partition otherwise;
     # - project only the two scalar sizes out of the builder, derive the
     #   rest from the scalars (each extra reference to the raw array is
     #   another inlined builder copy under projection collapse — the

@@ -3,7 +3,7 @@
 Every registered query key with an oracle is compared at sf0.001 (fast);
 run with ``SPARK_GRAFT_TEST_SF_DIR=/root/testdata/sf0.01`` to mirror the
 driver exactly.  Keys without an oracle get a smoke check (runs, stable
-schema, >=0 rows).
+schema: the plan's column names, and a non-empty result).
 """
 
 from __future__ import annotations
@@ -13,6 +13,11 @@ import pytest
 from tools.check_parity import canon_rows, compare, duck_con
 
 from odc_product_docker_images_spark import registry
+
+
+# Keys without an oracle whose result may be empty at the test scale, each
+# with a one-line reason.  None today: all of them return rows at sf0.001.
+_EMPTY_OK: dict[str, str] = {}
 
 
 def _keys():
@@ -29,9 +34,12 @@ def duck(sf_dir):
 @pytest.mark.parametrize("key", _keys())
 def test_query_parity(key, spark, sf_dir, duck):
     q = registry.all_queries()[key]
-    sdf = q.fn(spark, sf_dir).toPandas()
+    df = q.fn(spark, sf_dir)
+    sdf = df.toPandas()
     if q.oracle is None:
-        assert len(sdf) >= 0
+        assert list(sdf.columns) == df.schema.names
+        if key not in _EMPTY_OK:
+            assert len(sdf) > 0, f"{key}: no rows"
         return
     ddf = duck.execute(q.oracle).df()
     problems = compare(key, sdf, ddf)

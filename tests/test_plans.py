@@ -5,6 +5,7 @@ engine relies on are pinned as tests."""
 from __future__ import annotations
 
 import re
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -3093,3 +3094,38 @@ def test_shard_manifest_keeps_shard_pack_plan_shape(spark):
     # plan shape matches the established shard_pack pattern: equal
     # exchange counts (the checksum folds into the SAME per-shard agg)
     assert C.exchange_count(df) == C.exchange_count(shard_pack(spark, SF))
+
+
+def test_geomedian_solves_size_from_host(spark):
+    """The geomedian solves' one Exchange has max(fanout, rows/250k)
+    partitions: every Python task pays a fixed start-up cost, so the count
+    follows the host's width and a data-derived memory cap, never a
+    literal floor."""
+    from odc_product_docker_images_spark.io import fanout, table_rows
+    from odc_product_docker_images_spark.kernels.geomad import agg_geomedian_mads
+    from odc_product_docker_images_spark.kernels.geomedian import agg_geomedian
+
+    want = max(fanout(spark), -(-table_rows(SF, "lineitem") // 250_000))
+    for build in (agg_geomedian, agg_geomedian_mads):
+        df = build(spark, SF)
+        assert C.exchange_count(df) == 1
+        counts = re.findall(r"hashpartitioning\(l_suppkey#\d+L?, (\d+)\)", C.formatted_plan(df))
+        assert counts and {int(n) for n in counts} == {want}, (build.__name__, counts, want)
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 12), reason="3.12+ re-reads zips lazily; no guard")
+def test_python_workers_run_under_pyworker(spark):
+    """Python tasks run in workers forked from the engine's daemon, which
+    guards zipimporter.invalidate_caches (no per-task zip re-reads)."""
+
+    def probe(batches):
+        import zipimport
+
+        import pandas as pd
+
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"m": [zipimport.zipimporter.invalidate_caches.__module__]})
+
+    rows = spark.range(4, numPartitions=2).mapInPandas(probe, "m string").collect()
+    assert {r.m for r in rows} == {"odc_product_docker_images_spark.pyworker"}

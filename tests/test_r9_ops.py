@@ -155,17 +155,19 @@ def test_heavy_hitters_online_compress_keeps_guarantees():
         assert t in est, f"true heavy hitter {t} lost by online compress"
 
 
-def test_geomedian_partition_count_is_data_derived(spark):
-    """r9b: the holistic kernels size their shuffle from the data —
-    floor 32 at graded scales (plan-stable), rows/250k above it."""
-    from odc_product_docker_images_spark.kernels.geomedian import agg_geomedian
+def test_geomedian_partition_count_is_data_derived(spark, monkeypatch):
+    """r9b: the holistic kernels size their shuffle from the host and the
+    data — the host's fan-out width on small inputs, one task per ~250k
+    rows above it."""
+    from odc_product_docker_images_spark.io import fanout
+    from odc_product_docker_images_spark.kernels import geomedian as G
 
-    # graded fixture is far below 8M rows -> the floor (32) holds, so
-    # the kernel sees exactly the r1 partition layout
-    assert agg_geomedian(spark, SF).rdd.getNumPartitions() == 32
-    # the sizing rule itself: one task per ~250k rows above the floor
-    assert max(32, -(-60_000_000 // 250_000)) == 240  # the 100x tier
-    assert max(32, -(-600_000_000 // 250_000)) == 2400  # the 1000x tier
+    # the fixture is far below fanout x 250k rows -> the host's width holds
+    assert G.agg_geomedian(spark, SF).rdd.getNumPartitions() == fanout(spark)
+    # the memory cap: one task per ~250k rows (the 100x and 1000x tiers)
+    for rows, parts in ((60_000_000, 240), (600_000_000, 2400)):
+        monkeypatch.setattr(G, "table_rows", lambda sf_dir, table, n=rows: n)
+        assert G.solve_partitions(spark, SF) == parts
 
 
 def test_audit_gate_bounded_and_engine_consistent(spark):

@@ -7,6 +7,13 @@ min/max skipping and prunes unread columns, so the engine's "scan" is just
 ``spark.read.parquet`` + declarative ``where``/``select`` — keep predicates
 declarative and NEVER materialize before filtering.
 
+Like the reference, which plans a load from its index's metadata, ``load``
+infers a table's schema once (a footer-reading Spark job) and passes it to
+every later read, so building a query starts no job.  It memoizes the
+schema, never the DataFrame: each call lists the files and builds a fresh
+relation, because a self-join of ONE DataFrame object cannot tell its two
+sides apart (``a.k < b.k`` fails as ambiguous).
+
 Scale notes (100 TB): real deployments should write the fact tables
 partitioned by a time key (``partitionBy('ship_month')``-style) so static +
 dynamic partition pruning replace the reference's Postgres extent index;
@@ -17,8 +24,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from . import schemas
+from .scratch import fixture_tag
 
 # Tables whose feed-style timestamp column has shipped in different
 # physical forms across fixture generations: TIMESTAMP(NANOS) int64 (which
@@ -29,6 +38,19 @@ from . import schemas
 # engine uses everywhere (session tz is pinned UTC, so the NTZ cast is
 # value-preserving) — still one codegen'd scan, no Python in the path.
 _NANOS_TS: dict[str, list[str]] = {"events": ["ts"]}
+
+# Session confs, besides the nanos one ``load`` pins, that change what
+# parquet schema inference returns.
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# (table path, inference confs) -> (fixture_tag when inferred, schema);
+# a rewritten table has a new tag and is inferred again.
+_SCHEMAS: dict[tuple[str, tuple[str, ...]], tuple[str, StructType]] = {}
 
 
 def fanout(obj: SparkSession | DataFrame) -> int:
@@ -95,10 +117,17 @@ def load(spark: SparkSession, sf_dir: str, table: str, validate: bool = False) -
     """Scan one fixture table. Declared-schema validation optional (cheap,
     footer-only) per the fixed-schema policy (schemas.py)."""
     nanos_cols = _NANOS_TS.get(table, [])
-    if nanos_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
-    types = dict(df.dtypes)
+    # session-wide, so set on every load: the memo never holds a schema
+    # inferred under the other value
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    path = f"{sf_dir}/{table}.parquet"
+    key = (path, tuple(spark.conf.get(c) for c in _INFERENCE_CONFS))
+    tag = fixture_tag(sf_dir, table)
+    if key not in _SCHEMAS or _SCHEMAS[key][0] != tag:
+        _SCHEMAS[key] = (tag, spark.read.parquet(path).schema)
+    schema = _SCHEMAS[key][1]
+    df = spark.read.schema(schema).parquet(path)
+    types = {f.name: f.dataType.simpleString() for f in schema.fields}
     for c in nanos_cols:
         if types.get(c) == "bigint":
             # int64 nanos — integer `div`, not `/`: nanos exceed double's

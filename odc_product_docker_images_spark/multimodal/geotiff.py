@@ -48,6 +48,10 @@ _EPSG = 4326
 # GTRasterType=1 (PixelIsArea), GeographicType=EPSG:4326
 _GEOKEYS = (1, 1, 0, 3, 1024, 0, 1, 2, 1025, 0, 1, 1, 2048, 0, 1, _EPSG)
 
+# the encoded scene store: written by the encoder, read back with this DDL
+# instead of inferring it from the files just written
+_SCENES = "event_type string, payload binary"
+
 _SHORT, _LONG, _DOUBLE = 3, 4, 12
 _TYPE_FMT = {_SHORT: "H", _LONG: "I", _DOUBLE: "d"}
 _TYPE_SIZE = {_SHORT: 2, _LONG: 4, _DOUBLE: 8}
@@ -256,12 +260,10 @@ def sink_geotiff_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    encoded = cells.groupBy("event_type").applyInPandas(
-        _encode_scenes, "event_type string, payload binary"
-    )
+    encoded = cells.groupBy("event_type").applyInPandas(_encode_scenes, _SCENES)
     store = str(fresh("geotiff_store"))
     encoded.write.mode("overwrite").parquet(store)
-    return spark.read.parquet(store).mapInPandas(
+    return spark.read.schema(_SCENES).parquet(store).mapInPandas(
         _decode_scenes,
         schema=(
             "event_type string, width int, height int, n_strips int,"

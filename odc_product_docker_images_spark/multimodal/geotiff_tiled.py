@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from ..io import load
 from ..registry import register
 from ..scratch import fresh
-from .geotiff import _DOUBLE, _LONG, _SHORT, geokeys, pack_ifd, parse_ifd
+from .geotiff import _DOUBLE, _LONG, _SCENES, _SHORT, geokeys, pack_ifd, parse_ifd
 
 _W, _H = 48, 32  # scene raster; multiples of the tile edge by construction
 _TILE = 16
@@ -221,12 +221,10 @@ def sink_geotiff_tiled(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    encoded = cells.groupBy("event_type").applyInPandas(
-        _encode_scenes, "event_type string, payload binary"
-    )
+    encoded = cells.groupBy("event_type").applyInPandas(_encode_scenes, _SCENES)
     store = str(fresh("geotiff_tiled_store"))
     encoded.write.mode("overwrite").parquet(store)
-    return spark.read.parquet(store).mapInPandas(
+    return spark.read.schema(_SCENES).parquet(store).mapInPandas(
         _decode_scenes,
         schema=(
             "event_type string, width int, height int, n_tiles int,"

@@ -179,11 +179,12 @@ def source_tile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINT cast (DuckDB's double→int cast ROUNDS, Spark's truncates) and
     the cell mean through the exact decimal path (a bare AVG of doubles is
     summation-order-dependent)."""
-    from ..sources.tile_source import register_tile_source
+    from ..sources.tile_source import TILE_SCHEMA, register_tile_source
 
     register_tile_source(spark)
     px = (
         spark.read.format("synthetic_tiles")
+        .schema(TILE_SCHEMA)
         .option("tiles", "4")
         .option("tile_size", "32")
         .load()
@@ -229,12 +230,13 @@ def source_tile_scan_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixel values and flips the hash row.  Per-tile decode tasks are
     independent executors reads — the Datacube.load / GDAL fan-out
     shape; at 100 TB the blob dir is the object bucket."""
-    from ..sources.tile_source import ensure_tiff_tiles, register_tile_source
+    from ..sources.tile_source import TILE_SCHEMA, ensure_tiff_tiles, register_tile_source
 
     blob_dir = ensure_tiff_tiles(tiles=4, tile_size=32)
     register_tile_source(spark)
     px = (
         spark.read.format("tiff_tiles")
+        .schema(TILE_SCHEMA)
         .option("path", blob_dir)
         .option("tiles", "4")
         .option("tile_size", "32")

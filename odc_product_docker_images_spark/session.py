@@ -12,6 +12,15 @@ testing but every knob is the one you would tune on a 1000-executor cluster:
 - UTC session timezone: fixtures are tz-naive; DuckDB oracles compare equal.
 - Python workers run under ``pyworker``, which removes a fixed CPU cost
   from every Python task (zip directory re-reads on Python < 3.12).
+- DataFrame debugging off (``get_spark``'s static conf, and in ``prep`` the
+  process-wide flag PySpark caches from it): PySpark 4 otherwise wraps
+  every ``F.*`` call in ~5 py4j round trips and a stack walk to record its
+  call site, most of the cost of building a query's DataFrame.  Errors
+  lose that Python call site; the engine's key/phase job tags (ROADMAP
+  item 2) are what should name them.
+- Sized from the host when ``SPARK_GRAFT_CPUS`` / ``SPARK_DRIVER_MEM`` are
+  unset: the cores this process may run on, and a heap of at most half
+  the machine's memory.
 - shuffle.partitions: local default = cores; at cluster scale this is set
   ~2-3x total cores (or left to AQE's coalescing from a high initial value).
 """
@@ -21,7 +30,17 @@ from __future__ import annotations
 import os
 from pathlib import Path
 
+import pyspark.errors.utils as pyspark_errors_utils
 from pyspark.sql import SparkSession
+
+_DEBUGGING = "spark.python.sql.dataFrameDebugging.enabled"
+
+
+def _host_heap() -> str:
+    """16g, capped at half of ``MemTotal`` (whole GiB, at least 1g)."""
+    with open("/proc/meminfo") as fh:
+        total_gib = int(fh.readline().split()[1]) / 2**20
+    return f"{max(1, min(16, int(total_gib // 2)))}g"
 
 
 def get_spark(
@@ -29,7 +48,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(os.environ.get("SPARK_MASTER", f"local[{cpus}]"))
@@ -49,7 +68,8 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _host_heap())
+        .config(_DEBUGGING, "false")
         # workers fork from a daemon that stops every task re-reading the
         # zips on the worker path (see pyworker.py); the package's parent
         # on the worker path makes it, and the kernels pickled by
@@ -72,6 +92,10 @@ def prep(spark: SparkSession) -> SparkSession:
     be set post-launch (unlike driver memory).
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    # DataFrame debugging off (see get_spark).  Its conf is static, so on
+    # a session built elsewhere it cannot be set; PySpark reads it once
+    # per process into this cache, which is what every F.* call consults
+    pyspark_errors_utils._enable_debugging_cache = False
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     # a default-200-partition host session runs 200-task stages for every

@@ -21,6 +21,10 @@ from collections.abc import Iterator
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import StructType
 
+# Both tile sources' rows.  Readers pass it to ``spark.read.schema``: a
+# Python source asked for its schema at load time starts a Python worker.
+TILE_SCHEMA = "tile_x int, tile_y int, y long, x long, red double, nir double"
+
 
 class TilePartition(InputPartition):
     def __init__(self, tile_x: int, tile_y: int):
@@ -56,7 +60,7 @@ class SyntheticTileSource(DataSource):
         return "synthetic_tiles"
 
     def schema(self) -> str:
-        return "tile_x int, tile_y int, y long, x long, red double, nir double"
+        return TILE_SCHEMA
 
     def reader(self, schema: StructType) -> DataSourceReader:
         return SyntheticTileReader(self.options)
@@ -158,7 +162,7 @@ class TiffTileSource(DataSource):
         return "tiff_tiles"
 
     def schema(self) -> str:
-        return "tile_x int, tile_y int, y long, x long, red double, nir double"
+        return TILE_SCHEMA
 
     def reader(self, schema: StructType) -> DataSourceReader:
         return TiffTileReader(self.options)

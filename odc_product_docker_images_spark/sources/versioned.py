@@ -19,7 +19,8 @@ the reference's plain file trees lack and a 100 TB lakehouse needs:
 This is deliberately the mechanics of Delta/Iceberg in ~100 lines — at
 production scale you'd adopt one of those formats wholesale; the engine
 keeps the same read/write API either way.  O(1) planning: a scan reads one
-JSON manifest instead of listing O(files) directories.
+JSON manifest instead of listing O(files) directories, and a manifest
+whose files share one schema records it, so the scan infers nothing.
 """
 
 from __future__ import annotations
@@ -32,6 +33,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..functions.det import dsum, sql_dsum
 from ..io import load
@@ -83,12 +85,15 @@ class VersionedTable:
     def _manifest(self, version: int) -> dict:
         return json.loads((self.manifest_dir / f"v{version}.json").read_text())
 
-    def snapshot_files(self, version: int | None = None) -> list[str]:
+    def _snapshot(self, version: int | None = None) -> dict | None:
+        """The manifest of ``version`` (default latest), None if no table."""
         if version is None:
             version = self.latest_version()
-        if version is None:
-            return []
-        return [str(self.path / f) for f in self._manifest(version)["files"]]
+        return None if version is None else self._manifest(version)
+
+    def snapshot_files(self, version: int | None = None) -> list[str]:
+        m = self._snapshot(version)
+        return [str(self.path / f) for f in m["files"]] if m else []
 
     def _file_stats(self, relname: str) -> dict[str, list[float]]:
         """Per-file min/max for ``stat_cols`` from the parquet FOOTER —
@@ -144,11 +149,16 @@ class VersionedTable:
             if statted.get(name, 0) == md.num_row_groups
         }
 
-    def _commit(self, files: list[str], operation: str) -> int:
-        """Atomically publish a new snapshot listing ``files`` (relative)."""
+    def _commit(self, files: list[str], operation: str, schema: str | None) -> int:
+        """Atomically publish a new snapshot listing ``files`` (relative);
+        ``schema`` is the StructType JSON string every one of them was
+        written with (Delta's ``schemaString``), or None when they differ
+        or it is unknown."""
         self.manifest_dir.mkdir(parents=True, exist_ok=True)
         new_v = (self.latest_version() or 0) + 1 if self.versions() else 0
         manifest = {"version": new_v, "operation": operation, "files": sorted(files)}
+        if schema is not None:
+            manifest["schema"] = schema
         if self.stat_cols:
             prev_stats = {}
             if self.versions():
@@ -215,12 +225,14 @@ class VersionedTable:
 
     def write(self, df: DataFrame, mode: str = "append", n_files: int | None = None) -> int:
         new_files = self._write_data(df, n_files)
+        schema = _file_schema(df)
         if mode == "append" and self.latest_version() is not None:
-            prev = self._manifest(self.latest_version())["files"]
-            new_files = list(prev) + new_files
+            prev = self._manifest(self.latest_version())
+            new_files = list(prev["files"]) + new_files
+            schema = _same_schema(prev, schema)
         elif mode != "append" and mode != "overwrite":
             raise ValueError(f"mode must be append|overwrite, got {mode!r}")
-        return self._commit(new_files, mode)
+        return self._commit(new_files, mode, schema)
 
     def clone_shallow(self, dest_path: str) -> "VersionedTable":
         """SHALLOW CLONE (Delta ``CREATE TABLE ... SHALLOW CLONE`` analog):
@@ -236,18 +248,20 @@ class VersionedTable:
 
         dest = VersionedTable(dest_path, stat_cols=self.stat_cols)
         dest.path.mkdir(parents=True, exist_ok=True)
+        src = self._snapshot() or {"files": []}
         refs = [
-            os.path.relpath(os.path.realpath(f), dest.path.resolve())
-            for f in self.snapshot_files()
+            os.path.relpath(os.path.realpath(self.path / f), dest.path.resolve())
+            for f in src["files"]
         ]
-        dest._commit(refs, "clone")
+        dest._commit(refs, "clone", src.get("schema"))
         return dest
 
     def compact(self, spark: SparkSession, n_files: int = 1) -> int:
         """Rewrite the LATEST snapshot into ``n_files`` files as a new
         version.  Old files stay on disk — older snapshots still plan them."""
-        new_files = self._write_data(self.read(spark), n_files)
-        return self._commit(new_files, "compact")
+        df = self.read(spark)
+        new_files = self._write_data(df, n_files)
+        return self._commit(new_files, "compact", _file_schema(df))
 
     def merge(self, spark: SparkSession, updates: DataFrame, key: str) -> int:
         """MERGE (upsert) by ``key`` with file-level copy-on-write — the
@@ -291,7 +305,8 @@ class VersionedTable:
                 f"merge updates must be unique on {key!r}: "
                 f"{chk['n']} rows but {chk['nd']} distinct keys"
             )
-        prev = self._manifest(self.latest_version())["files"]
+        prev_m = self._manifest(self.latest_version())
+        prev = prev_m["files"]
         # File skipping on the merge key (r12, guide §6.2 / the Delta MERGE
         # mechanic): a file whose footer [min,max] on ``key`` misses the
         # updates' [lo,hi] range cannot contain a matched key, so it is
@@ -330,7 +345,9 @@ class VersionedTable:
         # them is the same driver-side planning every table format's MERGE
         # does.
         if candidates:
-            cand_df = spark.read.parquet(*[str(self.path / f) for f in candidates])
+            cand_df = _reader(spark, prev_m).parquet(
+                *[str(self.path / f) for f in candidates]
+            )
             touched_rows = (
                 cand_df.withColumn("_f", F.input_file_name())
                 .join(updates.select(key).hint("broadcast"), key, "left_semi")
@@ -354,14 +371,18 @@ class VersionedTable:
             # the update KEY set is the side both joins already commit to
             # broadcasting at any supported merge size
             keep = (
-                spark.read.parquet(*[str(self.path / f) for f in rewrite])
+                _reader(spark, prev_m)
+                .parquet(*[str(self.path / f) for f in rewrite])
                 .join(updates.select(key).hint("broadcast"), key, "left_anti")
             )
             rewritten = keep.unionByName(updates)
         else:
             rewritten = updates
         new_files = self._write_data(rewritten, n_files=None)
-        return self._commit(untouched + new_files, "merge")
+        schema = _file_schema(rewritten)
+        if untouched:
+            schema = _same_schema(prev_m, schema)
+        return self._commit(untouched + new_files, "merge", schema)
 
     def change_feed(
         self,
@@ -386,19 +407,20 @@ class VersionedTable:
         respect key uniqueness).  Duplicate keys would make the full-outer
         join a per-key cross product and mis-classify changes instead of
         erroring — guarded in tests/test_versioned.py."""
-        mf, mt = self._manifest(v_from)["files"], self._manifest(v_to)["files"]
+        m_from, m_to = self._manifest(v_from), self._manifest(v_to)
+        mf, mt = m_from["files"], m_to["files"]
         mf_set, mt_set = set(mf), set(mt)
         removed = [f for f in mf if f not in mt_set]
         added = [f for f in mt if f not in mf_set]
 
-        def _rows(files: list[str], side: str) -> DataFrame:
+        def _rows(m: dict, files: list[str], side: str) -> DataFrame:
             if files:
-                df = spark.read.parquet(*[str(self.path / f) for f in files])
+                df = _reader(spark, m).parquet(*[str(self.path / f) for f in files])
             else:  # empty side (pure append / pure delete): same schema, 0 rows
                 df = self.read(spark, v_to).where(F.lit(False))
             return df.select(F.col(key), F.col(value_col).alias(f"{value_col}_{side}"))
 
-        before, after = _rows(removed, "before"), _rows(added, "after")
+        before, after = _rows(m_from, removed, "before"), _rows(m_to, added, "after")
         b, a = F.col(f"{value_col}_before"), F.col(f"{value_col}_after")
         return (
             before.join(after, key, "full")
@@ -457,7 +479,8 @@ class VersionedTable:
         O(manifest) regardless of table size."""
         if version not in self.versions():
             raise ValueError(f"version {version} does not exist")
-        return self._commit(self._manifest(version)["files"], "restore")
+        m = self._manifest(version)
+        return self._commit(m["files"], "restore", m.get("schema"))
 
     # -- read path ---------------------------------------------------------
 
@@ -467,16 +490,16 @@ class VersionedTable:
         version: int | None = None,
         merge_schema: bool = False,
     ) -> DataFrame:
-        files = self.snapshot_files(version)
-        if not files:
+        m = self._snapshot(version)
+        if not m or not m["files"]:
             raise ValueError(f"no snapshot at version={version!r} in {self.path}")
-        reader = spark.read
+        files = [str(self.path / f) for f in m["files"]]
         if merge_schema:
             # Schema evolution: snapshots may span files written before and
             # after a column was added; mergeSchema unions the footers and
             # fills missing columns with NULL (Delta's additive evolution).
-            reader = reader.option("mergeSchema", "true")
-        return reader.parquet(*files)
+            return spark.read.option("mergeSchema", "true").parquet(*files)
+        return _reader(spark, m).parquet(*files)
 
     def file_count(self, version: int | None = None) -> int:
         return len(self.snapshot_files(version))
@@ -487,9 +510,9 @@ class VersionedTable:
         """Manifest-stats file pruning: keep files whose [min,max] overlaps
         EVERY predicate interval (files without stats are always kept —
         stats are an optimization, never a correctness dependency)."""
-        if version is None:
-            version = self.latest_version()
-        m = self._manifest(version)
+        return self._plan(self._snapshot(version), preds)
+
+    def _plan(self, m: dict, preds: dict[str, tuple[float, float]]) -> list[str]:
         stats = m.get("stats", {})
         kept = []
         for f in m["files"]:
@@ -514,13 +537,43 @@ class VersionedTable:
         is the difference between scanning the table and scanning the few
         files a well-clustered (range- or Z-ordered) layout maps the
         predicate to."""
-        files = self.plan_files(preds, version)
+        m = self._snapshot(version)
+        files = self._plan(m, preds)
         if not files:
             return self.read(spark, version).where(F.lit(False))
-        df = spark.read.parquet(*files)
+        df = _reader(spark, m).parquet(*files)
         for col, (lo, hi) in preds.items():
             df = df.where(F.col(col).between(lo, hi))
         return df
+
+
+def _reader(spark: SparkSession, manifest: dict):
+    """A parquet reader for files of ``manifest``: with the recorded schema
+    when there is one, so Spark starts no footer-inference job, else
+    inferring as before."""
+    schema = manifest.get("schema")
+    return spark.read.schema(StructType.fromJson(json.loads(schema))) if schema else spark.read
+
+
+def _file_schema(df: DataFrame) -> str:
+    """Compact StructType JSON of the files ``df`` writes, as Spark reads
+    them back: every field, array element and map value nullable."""
+
+    def nullable(j):
+        if isinstance(j, dict):
+            return {
+                k: True if k in ("nullable", "containsNull", "valueContainsNull") else nullable(v)
+                for k, v in j.items()
+            }
+        return [nullable(v) for v in j] if isinstance(j, list) else j
+
+    return json.dumps(nullable(df.schema.jsonValue()), separators=(",", ":"))
+
+
+def _same_schema(prev: dict, schema: str) -> str | None:
+    """``schema`` if the snapshot ``prev`` recorded the same one (so the
+    files carried over and the new ones share it), else None."""
+    return schema if prev.get("schema") == schema else None
 
 
 def _fresh_table(prefix: str) -> VersionedTable:

@@ -173,3 +173,17 @@ def test_bench_summary_line_is_small_parseable_json():
     # stays far under any sane tail-capture window even with the real
     # headline key set (~25 keys at ~30 chars each)
     assert len(line) < 4096
+
+
+def test_dataframe_debugging_is_off(spark):
+    """get_spark builds sessions with DataFrame debugging off, and prep
+    turns it off on a session built elsewhere, even after PySpark has
+    cached the flag as on (its conf is static there)."""
+    from pyspark.errors import utils
+
+    from odc_product_docker_images_spark.session import prep
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    utils._enable_debugging_cache = True
+    prep(spark)
+    assert not utils.is_debugging_enabled()

@@ -3129,3 +3129,38 @@ def test_python_workers_run_under_pyworker(spark):
 
     rows = spark.range(4, numPartitions=2).mapInPandas(probe, "m string").collect()
     assert {r.m for r in rows} == {"odc_product_docker_images_spark.pyworker"}
+
+
+# The benchmark's EO product chain and curation mix (perfbench/workloads.py).
+_BENCH_KEYS = [
+    "scan_pushdown", "product_ndvi_anomaly", "product_water_permanency",
+    "udf_wofs_summary", "agg_median", "agg_percentile_composite",
+    "agg_geomedian", "window_rolling", "join_asof", "source_tile_scan_tiff",
+    "sink_geotiff_tiled",
+    "text_quality", "text_repetition", "explode_tokens", "dedup_exact_hash",
+    "dedup_minhash", "sim_topk_cosine", "sim_ann_lsh", "shard_pack",
+]
+# Keys whose DataFrame is built on a Spark action, each with its reason.
+_EAGER_OK = {
+    "sink_geotiff_tiled": "writes its encoded scene store, the sink under test",
+}
+
+
+@pytest.mark.parametrize("key", [k for k in _BENCH_KEYS if k not in _EAGER_OK])
+def test_warm_plan_starts_no_job(spark, key):
+    """Building a benchmark key's DataFrame on a warm session is planning
+    only: schemas come from the io memo, manifests or declared DDL, never
+    from a footer-inference job."""
+    from odc_product_docker_images_spark import registry
+
+    fn = registry.all_queries()[key].fn
+    fn(spark, SF)  # warm: first-use artifacts and schema inference
+    sc = spark.sparkContext
+    group = f"plan-{key}"
+    sc.setJobGroup(group, f"build {key}")
+    try:
+        fn(spark, SF)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts reach the status store
+    assert sc.statusTracker().getJobIdsForGroup(group) == [], key

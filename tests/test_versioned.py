@@ -7,6 +7,7 @@ import json
 from pathlib import Path
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 import pytest
 
@@ -324,3 +325,78 @@ def test_shallow_clone_shares_files_and_diverges(spark):
     assert dropped == 1
     assert all(Path(f).exists() for f in src_files)
     assert src.read(spark).count() == before_rows
+
+
+def test_every_commit_records_its_schema(spark):
+    """Overwrite, append, merge, compact, restore and clone each record the
+    schema of their files, so no read of these snapshots infers one; the
+    recorded schema is the one a read of the files infers."""
+    t = _table()
+    df = spark.range(400).select(F.col("id").alias("k"), (F.col("id") * 1.5).alias("v"))
+    t.write(df.where("k < 200"), mode="overwrite", n_files=2)
+    t.write(df.where("k >= 200"), n_files=2)
+    t.merge(spark, df.where("k < 20").select("k", F.lit(-1.0).alias("v")), key="k")
+    t.compact(spark, n_files=2)
+    t.restore(1)
+    clone = t.clone_shallow(str(fresh("vtest_c")))
+    tables = [(t, v) for v in t.versions()] + [(clone, 0)]
+    for table, v in tables:
+        m = table._manifest(v)
+        assert "schema" in m, f"{m['operation']} recorded no schema"
+        inferred = spark.read.parquet(*table.snapshot_files(v)).schema
+        assert T.StructType.fromJson(json.loads(m["schema"])) == inferred, m["operation"]
+
+
+def test_reads_use_the_recorded_schema(spark):
+    """read and read_where of a snapshot return exactly the schema Spark
+    infers from its files, nullability included."""
+    t = VersionedTable(str(_table().path), stat_cols=["k"])
+    df = spark.range(1000).select(
+        F.col("id").alias("k"),
+        F.array(F.col("id")).alias("a"),
+        F.create_map(F.lit("x"), F.col("id")).alias("m"),
+    )
+    t.write(df.repartitionByRange(4, "k"), mode="overwrite")
+    inferred = spark.read.parquet(*t.snapshot_files()).schema
+    assert t.read(spark).schema == inferred
+    assert t.read_where(spark, {"k": (100, 199)}).schema == inferred
+    assert t.read_where(spark, {"k": (100, 199)}).count() == 100
+
+
+def test_schema_changing_append_records_none(spark):
+    """An append that adds a column leaves a snapshot of two physical
+    schemas: it records none, a plain read infers as before, and
+    ``merge_schema=True`` still unions the footers."""
+    t = _table()
+    base = spark.range(100).withColumnRenamed("id", "k")
+    t.write(base, mode="overwrite", n_files=1)
+    t.write(base.select((F.col("k") + 100).alias("k"), F.lit(7).alias("q")), n_files=1)
+    assert "schema" in t._manifest(0)
+    assert "schema" not in t._manifest(1)
+    merged = t.read(spark, merge_schema=True)
+    assert merged.columns == ["k", "q"]
+    assert merged.where("q = 7").count() == 100
+    assert merged.count() == 200
+    assert t.read(spark).count() == 200
+
+
+def test_versioned_keys_match_oracles(spark, sf_dir):
+    """The registered storage-layer keys, which read their snapshots with
+    the recorded schemas, still hash-match their DuckDB oracles."""
+    from tools.check_parity import compare, duck_con
+
+    from odc_product_docker_images_spark import registry
+
+    keys = {
+        k: q for k, q in registry.all_queries().items()
+        if q.fn.__module__.endswith("sources.versioned")
+    }
+    assert len(keys) == 12
+    con = duck_con(sf_dir)
+    try:
+        for k, q in sorted(keys.items()):
+            assert q.oracle, k
+            problems = compare(k, q.fn(spark, sf_dir).toPandas(), con.execute(q.oracle).df())
+            assert not problems, f"{k}: {problems}"
+    finally:
+        con.close()

@@ -5,8 +5,9 @@ Usage: python tools/measure_scaleup.py key1,key2[,...] [--runs 3]
 
 Each key runs against /root/testdata/sf0.1 and the replica dir (default
 .tmp/sf1x10; pass --dir for the 100x tier built by make_scaleup_n.py) on
-the same warm local[32] session; per-dir timing is min-of-N (default 3)
-of a full materialization into a noop sink (no driver collect).
+the same warm session (local[$SPARK_GRAFT_CPUS], else one slot per host
+core); per-dir timing is min-of-N (default 3) of a full materialization
+into a noop sink (no driver collect).
 """
 
 from __future__ import annotations

@@ -299,7 +299,7 @@ def fast_sum_reassemble(hi_sum: Column, lo_sum: Column) -> Column:
     SCALE 6, HALF_UP — it pre-rounds the total at 6 dp.  That is
     bit-identical to the decimal path ONLY because the final
     exact_double(·, nd=6) applies the same idempotent half-up round;
-    dsum_fast/davg_fast therefore pin nd == 6 (any other nd would
+    dsum_fast/davg_fast therefore take no nd (any other nd would
     double-round and silently diverge from dsum and the DuckDB oracle)."""
     base = 1 << 13
     scaled = hi_sum.cast("decimal(38,0)") * F.lit(base).cast(
@@ -308,22 +308,19 @@ def fast_sum_reassemble(hi_sum: Column, lo_sum: Column) -> Column:
     return scaled / F.lit(10**10).cast("decimal(11,0)")
 
 
-def dsum_fast(col: Column | str, alias: str, nd: int = 6) -> Column:
-    """:func:`dsum` with long-split accumulation — same result, ~2× cheaper
-    per row; see :func:`_fast_dec_sum` for the domain contract.  nd is
-    pinned to 6: the fast path's scale-restoring divide already rounds at
-    6 dp (see the comment in :func:`_fast_dec_sum`)."""
-    assert nd == 6, "dsum_fast is only bit-identical to dsum at nd=6"
-    return exact_double(_fast_dec_sum(col), nd).alias(alias)
+def dsum_fast(col: Column | str, alias: str) -> Column:
+    """:func:`dsum` at nd=6 with long-split accumulation — same result,
+    ~2× cheaper per row; see :func:`_fast_dec_sum` for the domain
+    contract.  There is no nd: the fast path's scale-restoring divide
+    already rounds at 6 dp (see :func:`fast_sum_reassemble`)."""
+    return exact_double(_fast_dec_sum(col), 6).alias(alias)
 
 
-def davg_fast(col: Column | str, alias: str, nd: int = 6) -> Column:
-    """:func:`davg` with long-split accumulation (shares its sum buffers
-    with :func:`dsum_fast` on the same expression).  nd pinned to 6 — see
-    :func:`dsum_fast`."""
-    assert nd == 6, "davg_fast is only bit-identical to davg at nd=6"
+def davg_fast(col: Column | str, alias: str) -> Column:
+    """:func:`davg` at nd=6 with long-split accumulation (shares its sum
+    buffers with :func:`dsum_fast` on the same expression)."""
     c = _c(col)
-    return (exact_double(_fast_dec_sum(c), nd) / F.count(c).cast("double")).alias(
+    return (exact_double(_fast_dec_sum(c), 6) / F.count(c).cast("double")).alias(
         alias
     )
 
@@ -372,14 +369,6 @@ def davg_fast_wide(col: Column | str, alias: str) -> Column:
     c = _c(col)
     return (exact_double_wide(_fast_dec_sum_wide(c)) / F.count(c).cast("double")).alias(
         alias
-    )
-
-
-def sql_davg_wide(expr: str, alias: str) -> str:
-    """DuckDB twin of :func:`davg_fast_wide` (and of a wide plain davg)."""
-    return (
-        f"{sql_exact_double_wide(f'SUM({sql_dec_cast(expr)})')}"
-        f" / CAST(COUNT({expr}) AS DOUBLE) AS {alias}"
     )
 
 

@@ -26,7 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load
+from ..io import fanout, load
 from ..registry import register
 
 # fixed 'model weights' (a linear water-index stand-in)
@@ -153,7 +153,11 @@ def udf_arrow_map(spark: SparkSession, sf_dir: str) -> DataFrame:
                 names=["doc_id", "text_md5", "n_bytes", "n_tokens"],
             )
 
-    dc = load(spark, sf_dir, "documents").select("doc_id", "text").repartition(8, "doc_id")
+    dc = (
+        load(spark, sf_dir, "documents")
+        .select("doc_id", "text")
+        .repartition(fanout(spark), "doc_id")
+    )
     return dc.mapInArrow(
         digest_batches,
         schema="doc_id long, text_md5 string, n_bytes long, n_tokens long",

@@ -30,7 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load
+from ..io import fanout, load
 from ..registry import register
 
 COMPRESSED_DECODERS_AVAILABLE = False  # flip when PIL/turbojpeg exist in the image
@@ -215,7 +215,7 @@ def multimodal_framesample(spark: SparkSession, sf_dir: str) -> DataFrame:
     dc = load(spark, sf_dir, "documents")
     return (
         dc.select("doc_id", "text")
-        .repartition(8, "doc_id")
+        .repartition(fanout(spark), "doc_id")
         .mapInPandas(
             _framesample_batches,
             schema="doc_id long, frame_idx long, frame_md5 string, frame_len long",
@@ -310,7 +310,7 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     dc = load(spark, sf_dir, "documents")
     media = (
         dc.select("doc_id")
-        .repartition(8, "doc_id")
+        .repartition(fanout(spark), "doc_id")
         .mapInPandas(_audio_synth_batches, schema="doc_id long, payload binary")
     )
     return media.mapInPandas(
@@ -440,7 +440,7 @@ def multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     dc = load(spark, sf_dir, "documents")
     return (
         dc.select("doc_id")
-        .repartition(8, "doc_id")
+        .repartition(fanout(spark), "doc_id")
         .mapInPandas(
             _wav_decode_batches,
             schema=(
@@ -560,7 +560,7 @@ def multimodal_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     dc = load(spark, sf_dir, "documents")
     return (
         dc.select("doc_id")
-        .repartition(8, "doc_id")
+        .repartition(fanout(spark), "doc_id")
         .mapInPandas(
             _bmp_decode_batches,
             schema=(

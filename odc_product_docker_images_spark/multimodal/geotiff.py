@@ -1,36 +1,52 @@
-"""GeoTIFF container SINK — the reference's one output artifact (S4, r5).
+"""GeoTIFF codec and sinks — the reference's one output artifact (S4, r5).
 
 The reference's product workers end every run by exporting the composite
 as a per-scene GeoTIFF upload (⟨pub⟩ odc-product-docker-images :
 ``<product>/worker.py :: write_cog``; ⟨pub⟩ datacube-utilities :
 ``data_cube_utilities/import_export.py :: export_xarray_to_geotiff``).
 This module closes that gap with the same no-external-libs discipline as
-``multimodal/png.py``: a spec-correct classic-TIFF writer (little-endian
-header, ascending-tag IFD, one strip per row with out-of-line offset /
-byte-count arrays) carrying the three GeoTIFF geo-tags — ModelPixelScale
-(33550), ModelTiepoint (33922), and a GeoKeyDirectory (34735) declaring a
-geographic EPSG:4326 model — plus an INDEPENDENT decoder that re-parses
-the IFD, validates layout tags, reassembles strips, and recovers the geo
-metadata.
+``multimodal/png.py``: one classic-TIFF codec (little-endian header,
+ascending-tag IFD) with two block layouts:
 
-The registered key is a full sink ROUND-TRIP: composite → encode → write
-to a parquet object-store stand-in → re-read → decode → aggregate the
-DECODED pixels and geo tags, value-hash-gated against DuckDB regenerating
-the same raster arithmetically.  Any bug in IFD math, strip offsets, or
-the geo-tag plumbing breaks the position-weighted sum or the recovered
-scale/tiepoint constants.
+- uncompressed strips, one per row (StripOffsets / StripByteCounts);
+- Deflate-compressed 16×16 tiles (TileWidth / TileLength / TileOffsets /
+  TileByteCounts, Compression = 8), each tile an independent zlib stream —
+  the cloud-optimized layout (⟨pub⟩ cogeotiff/cog-spec; GDAL's COG driver
+  defaults to 512×512 DEFLATE tiles).  Tiles are the random-access unit
+  that makes range-request reads work, which the reference's product
+  uploads rely on downstream.
+
+One writer places the block offset / byte-count arrays and the three
+GeoTIFF geo-tags — ModelPixelScale (33550), ModelTiepoint (33922), and a
+GeoKeyDirectory (34735) declaring a geographic EPSG:4326 model — out of
+line after the IFD, for either layout.  One INDEPENDENT reader re-parses
+the IFD, validates the layout the tags claim, inflates tiles, reassembles
+the blocks in row-major order, and recovers the geo metadata.
+
+Two registered keys run the same sink ROUND-TRIP on their own scene grid
+(``sink_geotiff_roundtrip`` striped, ``sink_geotiff_tiled`` tiled):
+composite → encode → write to a parquet object-store stand-in → re-read →
+decode → aggregate the DECODED pixels and tags, value-hash-gated against
+DuckDB regenerating the same raster arithmetically.  Any bug in IFD math,
+block offsets, tile order, compression, or the geo-tag plumbing breaks
+the position-weighted sum or the recovered constants.  Compressed byte
+counts never enter the output (deflate output is zlib-version-specific;
+pixel content is not).
 
 Scale: the composite is one cell-keyed shuffle; encode is one
 ``applyInPandas`` per scene (scenes are the natural unit of the
-reference's export); decode is a zero-shuffle Arrow map over the store.
-At 100 TB the store is the object bucket and scenes encode in parallel —
-nothing here is driver-side.
+reference's export, and tiles compress independently); decode is a
+zero-shuffle Arrow map over the store.  At 100 TB the store is the object
+bucket and scenes encode in parallel — nothing here is driver-side.
 """
 
 from __future__ import annotations
 
 import struct
+import zlib
 from collections.abc import Iterator
+from itertools import accumulate
+from typing import NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -40,13 +56,19 @@ from ..io import load
 from ..registry import register
 from ..scratch import fresh
 
-_TW, _TH = 24, 15  # scene raster: x = min(floor(value/25), 23), y = floor(user_id/100)
-_SCALE = (25.0, 100.0, 0.0)  # ModelPixelScale: cell size in model units
-_TIEPOINT = (0.0, 0.0, 0.0, 0.0, 1500.0, 0.0)  # raster (0,0) ↔ model (0, 1500)
 _EPSG = 4326
 # GeoKeyDirectory: version 1.1.0, 3 keys — GTModelType=2 (geographic),
 # GTRasterType=1 (PixelIsArea), GeographicType=EPSG:4326
 _GEOKEYS = (1, 1, 0, 3, 1024, 0, 1, 2, 1025, 0, 1, 1, 2048, 0, 1, _EPSG)
+
+# sink_geotiff_roundtrip's scene: x = min(floor(value/25), 23), y = floor(user_id/100)
+_TW, _TH = 24, 15
+_SCALE = (25.0, 100.0, 0.0)  # ModelPixelScale: cell size in model units
+_TIEPOINT = (0.0, 0.0, 0.0, 0.0, 1500.0, 0.0)  # raster (0,0) ↔ model (0, 1500)
+# sink_geotiff_tiled's scene: sides are multiples of the tile edge (3 × 2 tiles)
+_W, _H, _TILE = 48, 32, 16
+_TILED_SCALE = (12.5, 50.0, 0.0)
+_TILED_TIEPOINT = (0.0, 0.0, 0.0, 0.0, 1600.0, 0.0)
 
 # the encoded scene store: written by the encoder, read back with this DDL
 # instead of inferring it from the files just written
@@ -57,25 +79,90 @@ _TYPE_FMT = {_SHORT: "H", _LONG: "I", _DOUBLE: "d"}
 _TYPE_SIZE = {_SHORT: 2, _LONG: 4, _DOUBLE: 8}
 
 
-def pack_ifd(entries: list[tuple[int, int, int, int]]) -> bytes:
-    """Pack an IFD: entry count + 12-byte entries (inline-left-packed for a
-    single SHORT, out-of-line offset otherwise) + the no-next-IFD pointer.
-    Shared by the striped and tiled writers — the inline-value rule lives
-    in exactly one place."""
-    out = bytearray(struct.pack("<H", len(entries)))
-    for tag, typ, cnt, val in entries:
-        if typ == _SHORT and cnt == 1:  # inline value, left-packed
-            out += struct.pack("<HHIHH", tag, typ, cnt, val, 0)
+class _Grid(NamedTuple):
+    """One sink's scene: raster size, block layout and geo tags.  The
+    composite bins (value, user_id) by the pixel scale, so the tags
+    describe exactly the cells the oracle regenerates."""
+
+    w: int
+    h: int
+    tile: int  # 0: one uncompressed strip per row; else the Deflate tile edge
+    scale: tuple
+    tiepoint: tuple
+
+    def pack(self, raster) -> bytes:
+        """Encode a (h, w) uint16 raster as a classic TIFF in this grid's
+        layout and geo tags (tiled sides must be tile multiples).  The
+        offset / byte-count arrays, the two double vectors and the GeoKey
+        directory live out of line after the IFD, then the blocks."""
+        h, w = raster.shape
+        px, t = raster.astype("<u2"), self.tile
+        if t:  # row-major tile order, per the spec
+            blocks = [
+                zlib.compress(px[y : y + t, x : x + t].tobytes(), 6)
+                for y in range(0, h, t)
+                for x in range(0, w, t)
+            ]
+            layout = [(322, _SHORT, 1, t), (323, _SHORT, 1, t)]  # TileWidth/Length
+            offs_tag, counts_tag, compression = 324, 325, 8  # Adobe Deflate
         else:
-            out += struct.pack("<HHII", tag, typ, cnt, val)
-    out += struct.pack("<I", 0)  # no next IFD
-    return bytes(out)
+            blocks = [px[y].tobytes() for y in range(h)]
+            layout = [(278, _SHORT, 1, 1)]  # RowsPerStrip
+            offs_tag, counts_tag, compression = 273, 279, 1  # none
+        n = len(blocks)
+        counts = [len(b) for b in blocks]
+        aux = 8 + 2 + 12 * (12 + len(layout)) + 4  # header, IFD, next-IFD link
+        ps = aux + 8 * n  # after the offset and byte-count arrays
+        data = ps + 24 + 48 + 32  # after the pixel scale, tiepoint and GeoKeys
+        entries = sorted(  # ascending tag order, as the spec requires
+            [
+                (256, _SHORT, 1, w),  # ImageWidth
+                (257, _SHORT, 1, h),  # ImageLength
+                (258, _SHORT, 1, 16),  # BitsPerSample
+                (259, _SHORT, 1, compression),
+                (262, _SHORT, 1, 1),  # Photometric = BlackIsZero
+                (277, _SHORT, 1, 1),  # SamplesPerPixel
+                (offs_tag, _LONG, n, aux),
+                (counts_tag, _LONG, n, aux + 4 * n),
+                (339, _SHORT, 1, 1),  # SampleFormat = unsigned int
+                (33550, _DOUBLE, 3, ps),  # ModelPixelScale
+                (33922, _DOUBLE, 6, ps + 24),  # ModelTiepoint
+                (34735, _SHORT, 16, ps + 72),  # GeoKeyDirectory
+                *layout,
+            ]
+        )
+        out = bytearray(struct.pack("<2sHIH", b"II", 42, 8, len(entries)))
+        for tag, typ, cnt, val in entries:
+            if typ == _SHORT and cnt == 1:  # inline value, left-packed
+                out += struct.pack("<HHIHH", tag, typ, cnt, val, 0)
+            else:
+                out += struct.pack("<HHII", tag, typ, cnt, val)
+        out += struct.pack(
+            f"<I{n}I{n}I3d6d16H",
+            0,  # no next IFD
+            *accumulate(counts[:-1], initial=data),
+            *counts,
+            *self.scale,
+            *self.tiepoint,
+            *_GEOKEYS,
+        )
+        return bytes(out) + b"".join(blocks)
 
 
-def parse_ifd(payload: bytes) -> dict[int, tuple]:
-    """Walk a little-endian classic-TIFF header + first IFD into a
-    tag → values dict (inline vs out-of-line by size; unknown types
-    skipped per spec).  Shared by both independent decoders."""
+_STRIPED = _Grid(_TW, _TH, 0, _SCALE, _TIEPOINT)
+_TILED = _Grid(_W, _H, _TILE, _TILED_SCALE, _TILED_TIEPOINT)
+# each layout's one-raster writer; the tile source's blobs are striped
+_pack_tiff, _pack_tiled = _STRIPED.pack, _TILED.pack
+
+
+def _read(payload: bytes):
+    """Independent reader for both layouts: walk the little-endian header
+    and first IFD (inline vs out-of-line by size; unknown types skipped
+    per spec), validate the layout the tags claim, inflate tiles, and
+    reassemble the blocks row-major, cropping tile padding back to
+    (ImageLength, ImageWidth).  Returns (tag → values, raster uint16)."""
+    import numpy as np
+
     if payload[:4] != b"II*\x00":
         raise NotImplementedError(f"unsupported container: {payload[:4]!r}")
     (ifd_off,) = struct.unpack_from("<I", payload, 4)
@@ -89,107 +176,79 @@ def parse_ifd(payload: bytes) -> dict[int, tuple]:
         size = _TYPE_SIZE[typ] * cnt
         off = base + 8 if size <= 4 else struct.unpack_from("<I", payload, base + 8)[0]
         tags[tag] = struct.unpack_from("<" + _TYPE_FMT[typ] * cnt, payload, off)
-    return tags
 
-
-def geokeys(gk: tuple) -> dict[int, int]:
-    """GeoKeyDirectory (tag 34735) entries → key id → value dict."""
-    return {gk[4 + 4 * i]: gk[7 + 4 * i] for i in range((len(gk) - 4) // 4)}
-
-
-def _pack_tiff(raster) -> bytes:
-    """Encode a (h, w) uint16 raster as a striped classic TIFF with geo
-    tags.  One strip per row; offset/byte-count arrays, the two double
-    vectors, and the GeoKey directory live out-of-line after the IFD."""
-    h, w = raster.shape
-    strips = [raster[y].astype("<u2").tobytes() for y in range(h)]
-    sbc = [len(s) for s in strips]
-
-    ifd_off = 8
-    n_entries = 13
-    aux_off = ifd_off + 2 + n_entries * 12 + 4
-    so_off = aux_off  # strip offsets array (LONG × h)
-    sbc_off = so_off + 4 * h  # strip byte counts (LONG × h)
-    ps_off = sbc_off + 4 * h  # ModelPixelScale (DOUBLE × 3)
-    tp_off = ps_off + 24  # ModelTiepoint (DOUBLE × 6)
-    gk_off = tp_off + 48  # GeoKeyDirectory (SHORT × 16)
-    data_off = gk_off + 32
-    offsets = []
-    acc = data_off
-    for c in sbc:
-        offsets.append(acc)
-        acc += c
-
-    entries = [  # ascending tag order, as the spec requires
-        (256, _SHORT, 1, w),  # ImageWidth
-        (257, _SHORT, 1, h),  # ImageLength
-        (258, _SHORT, 1, 16),  # BitsPerSample
-        (259, _SHORT, 1, 1),  # Compression = none
-        (262, _SHORT, 1, 1),  # Photometric = BlackIsZero
-        (273, _LONG, h, so_off),  # StripOffsets
-        (277, _SHORT, 1, 1),  # SamplesPerPixel
-        (278, _SHORT, 1, 1),  # RowsPerStrip
-        (279, _LONG, h, sbc_off),  # StripByteCounts
-        (339, _SHORT, 1, 1),  # SampleFormat = unsigned int
-        (33550, _DOUBLE, 3, ps_off),  # ModelPixelScale
-        (33922, _DOUBLE, 6, tp_off),  # ModelTiepoint
-        (34735, _SHORT, 16, gk_off),  # GeoKeyDirectory
-    ]
-    out = bytearray(struct.pack("<2sHI", b"II", 42, ifd_off))
-    out += pack_ifd(entries)
-    out += struct.pack(f"<{h}I", *offsets)
-    out += struct.pack(f"<{h}I", *sbc)
-    out += struct.pack("<3d", *_SCALE)
-    out += struct.pack("<6d", *_TIEPOINT)
-    out += struct.pack("<16H", *_GEOKEYS)
-    for s in strips:
-        out += s
-    return bytes(out)
+    w, h = tags[256][0], tags[257][0]
+    tiled = 322 in tags
+    if (tags[258][0], tags[259][0], tags[277][0], tags.get(339, (1,))[0]) != (
+        16, 8 if tiled else 1, 1, 1,
+    ):
+        raise NotImplementedError(
+            "only single-band uint16 as uncompressed strips or Deflate tiles is supported"
+        )
+    if tiled:
+        bw, bh, offs, counts = tags[322][0], tags[323][0], tags[324], tags[325]
+    else:  # one row per strip, as the writer lays them out
+        bw, bh, offs, counts = w, 1, tags[273], tags[279]
+    across, down = -(-w // bw), -(-h // bh)  # ceil-div: tiles cover the padded grid
+    mismatch = f"{'tile' if tiled else 'strip'} layout does not match IFD dimensions"
+    if len(offs) != across * down:
+        raise ValueError(mismatch)
+    mosaic = np.zeros((down * bh, across * bw), dtype=np.uint16)
+    for i, (o, c) in enumerate(zip(offs, counts)):
+        block = zlib.decompress(payload[o : o + c]) if tiled else payload[o : o + c]
+        if len(block) != 2 * bw * bh:
+            raise ValueError(mismatch)
+        r, col = divmod(i, across)
+        mosaic[r * bh : (r + 1) * bh, col * bw : (col + 1) * bw] = np.frombuffer(
+            block, dtype="<u2"
+        ).reshape(bh, bw)
+    return tags, mosaic[:h, :w]
 
 
 def _decode_tiff(payload: bytes):
-    """Independent reader: parse header + IFD (inline vs out-of-line by
-    size), validate the layout this writer claims, reassemble strips.
-    Returns (w, h, raster uint16 (h, w), pixel_scale, tiepoint, geokeys)."""
+    """:func:`_read` as (w, h, raster, pixel_scale, tiepoint, geokeys)."""
+    tags, raster = _read(payload)
+    return tags[256][0], tags[257][0], raster, tags[33550], tags[33922], tags[34735]
+
+
+def _encode_scene(grid: _Grid, pdf: pd.DataFrame) -> pd.DataFrame:
+    """One scene's composite cells (x, y, n) → its GeoTIFF payload."""
     import numpy as np
 
-    tags = parse_ifd(payload)
-    w, h = tags[256][0], tags[257][0]
-    if (tags[258][0], tags[259][0], tags[277][0], tags.get(339, (1,))[0]) != (16, 1, 1, 1):
-        raise NotImplementedError("only uncompressed single-band uint16 supported")
-    offs, counts = tags[273], tags[279]
-    if len(offs) != h or any(c != w * 2 for c in counts):
-        raise ValueError("strip layout does not match IFD dimensions")
-    rows = [
-        np.frombuffer(payload[o : o + c], dtype="<u2") for o, c in zip(offs, counts)
-    ]
-    return w, h, np.vstack(rows), tags[33550], tags[33922], tags[34735]
-
-
-def _encode_scenes(pdf: pd.DataFrame) -> pd.DataFrame:
-    import numpy as np
-
-    raster = np.zeros((_TH, _TW), dtype=np.uint16)
+    raster = np.zeros((grid.h, grid.w), dtype=np.uint16)
     x = pdf["x"].to_numpy(np.int64)
     y = pdf["y"].to_numpy(np.int64)
     raster[y, x] = np.minimum(pdf["n"].to_numpy(np.int64), 65535)
     return pd.DataFrame(
-        {"event_type": [pdf["event_type"].iloc[0]], "payload": [_pack_tiff(raster)]}
+        {"event_type": [pdf["event_type"].iloc[0]], "payload": [grid.pack(raster)]}
     )
 
 
-def _decode_scenes(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+# Decoded layout columns, each read from the parsed tags.
+_LAYOUT_COLUMNS = {
+    "n_strips": lambda tags: len(tags[273]),
+    "bits": lambda tags: tags[258][0],
+    "n_tiles": lambda tags: len(tags[324]),
+    "tile_edge": lambda tags: tags[322][0],
+    "compression": lambda tags: tags[259][0],
+}
+
+
+def _decode_scenes(layout: tuple, it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     import numpy as np
 
     for pdf in it:
         rows = []
         for et, payload in zip(pdf["event_type"], pdf["payload"]):
-            w, h, raster, ps, tp, gk = _decode_tiff(bytes(payload))
-            keys = geokeys(gk)
+            tags, raster = _read(bytes(payload))
+            gk = tags[34735]
+            keys = {gk[4 + 4 * i]: gk[7 + 4 * i] for i in range((len(gk) - 4) // 4)}
             flat = raster.astype(np.int64).ravel()
             rows.append(
                 (
-                    et, w, h, h, 16, int(keys[2048]), ps[0], ps[1], tp[4],
+                    et, tags[256][0], tags[257][0],
+                    *(_LAYOUT_COLUMNS[c](tags) for c in layout),
+                    int(keys[2048]), tags[33550][0], tags[33550][1], tags[33922][4],
                     int(flat.sum()),
                     int(((np.arange(flat.size) + 1) * flat).sum()),
                     int(flat.max()),
@@ -198,11 +257,60 @@ def _decode_scenes(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame(
             rows,
             columns=[
-                "event_type", "width", "height", "n_strips", "bits", "epsg",
+                "event_type", "width", "height", *layout, "epsg",
                 "scale_x", "scale_y", "origin_y", "px_sum",
                 "pos_weighted_sum", "max_px",
             ],
         )
+
+
+def _cells(spark: SparkSession, sf_dir: str, grid: _Grid) -> DataFrame:
+    """The per-scene composite: event counts binned onto the grid by its
+    pixel scale.  Out-of-footprint cells clip onto the scene edge (the
+    crop semantics of a fixed GeoBox), as in the oracles."""
+
+    def cell(col: str, size: float, last: int):
+        return F.least(
+            F.greatest(F.floor(F.col(col) / F.lit(size)).cast("bigint"), F.lit(0)),
+            F.lit(last),
+        )
+
+    return (
+        load(spark, sf_dir, "events")
+        .groupBy(
+            "event_type",
+            cell("value", grid.scale[0], grid.w - 1).alias("x"),
+            cell("user_id", grid.scale[1], grid.h - 1).alias("y"),
+        )
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+
+
+def _roundtrip(
+    spark: SparkSession, sf_dir: str, grid: _Grid, layout: tuple, store: str
+) -> DataFrame:
+    """Composite → encode one GeoTIFF per scene → WRITE the artifacts to
+    an object-store stand-in → re-read → decode with the independent
+    reader.  The emitted stats come from the DECODED pixels and the
+    RECOVERED tags."""
+    # a lambda, not a partial or bound method: applyInPandas inspects the
+    # function's signature (a partial warns, a bound method counts self)
+    encoded = _cells(spark, sf_dir, grid).groupBy("event_type").applyInPandas(
+        lambda pdf: _encode_scene(grid, pdf), _SCENES
+    )
+    path = str(fresh(store))
+    encoded.write.mode("overwrite").parquet(path)
+    return spark.read.schema(_SCENES).parquet(path).mapInPandas(
+        lambda it: _decode_scenes(layout, it),
+        schema=", ".join(
+            [
+                "event_type string, width int, height int",
+                *(f"{c} int" for c in layout),
+                "epsg int, scale_x double, scale_y double, origin_y double,"
+                " px_sum long, pos_weighted_sum long, max_px long",
+            ]
+        ),
+    )
 
 
 @register(
@@ -232,43 +340,50 @@ def _decode_scenes(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 )
 def sink_geotiff_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4: GeoTIFF export round-trip — composite each event_type scene
-    onto a fixed grid, encode a real striped GeoTIFF (IFD + geo tags) per
-    scene, WRITE the artifacts to an object-store stand-in, re-read, and
-    decode with the independent reader.  The emitted stats come from the
-    DECODED pixels and the RECOVERED geo tags, so the oracle's arithmetic
-    raster regeneration gates the whole encode→sink→decode path.
+    onto a fixed grid and encode a striped, uncompressed GeoTIFF (IFD +
+    geo tags) per scene, through the shared round-trip, so the oracle's
+    arithmetic raster regeneration gates the whole encode→sink→decode
+    path.
 
     Duplicate-cell counts above uint16 clip at 65535 on both sides (never
     reached at test scales); out-of-footprint x-cells clip onto the scene
     edge on both sides (the crop semantics of a fixed GeoBox)."""
-    cells = (
-        load(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            F.least(
-                F.greatest(
-                    F.floor(F.col("value") / F.lit(25.0)).cast("bigint"), F.lit(0)
-                ),
-                F.lit(_TW - 1),
-            ).alias("x"),
-            F.least(
-                F.greatest(
-                    F.floor(F.col("user_id") / F.lit(100.0)).cast("bigint"), F.lit(0)
-                ),
-                F.lit(_TH - 1),
-            ).alias("y"),
+    return _roundtrip(spark, sf_dir, _STRIPED, ("n_strips", "bits"), "geotiff_store")
+
+
+@register(
+    "sink_geotiff_tiled",
+    oracle=f"""
+        WITH c AS (
+            SELECT event_type,
+                   LEAST(GREATEST(CAST(FLOOR(value / 12.5) AS BIGINT), 0), {_W - 1}) AS x,
+                   LEAST(GREATEST(CAST(FLOOR(user_id / 50.0) AS BIGINT), 0), {_H - 1}) AS y,
+                   LEAST(COUNT(*), 65535) AS n
+            FROM events GROUP BY 1, 2, 3
         )
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    encoded = cells.groupBy("event_type").applyInPandas(_encode_scenes, _SCENES)
-    store = str(fresh("geotiff_store"))
-    encoded.write.mode("overwrite").parquet(store)
-    return spark.read.schema(_SCENES).parquet(store).mapInPandas(
-        _decode_scenes,
-        schema=(
-            "event_type string, width int, height int, n_strips int,"
-            " bits int, epsg int, scale_x double, scale_y double,"
-            " origin_y double, px_sum long, pos_weighted_sum long,"
-            " max_px long"
-        ),
+        SELECT event_type,
+               CAST({_W} AS INTEGER) AS width,
+               CAST({_H} AS INTEGER) AS height,
+               CAST({(_W // _TILE) * (_H // _TILE)} AS INTEGER) AS n_tiles,
+               CAST({_TILE} AS INTEGER) AS tile_edge,
+               CAST(8 AS INTEGER) AS compression,
+               CAST({_EPSG} AS INTEGER) AS epsg,
+               CAST(12.5 AS DOUBLE) AS scale_x,
+               CAST(50.0 AS DOUBLE) AS scale_y,
+               CAST(1600.0 AS DOUBLE) AS origin_y,
+               CAST(SUM(n) AS BIGINT) AS px_sum,
+               CAST(SUM((y * {_W} + x + 1) * n) AS BIGINT) AS pos_weighted_sum,
+               CAST(MAX(n) AS BIGINT) AS max_px
+        FROM c GROUP BY event_type
+    """,
+)
+def sink_geotiff_tiled(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """S4+: COG-layout GeoTIFF round-trip — tiled (16×16), Deflate-
+    compressed, geo-tagged, through the shared round-trip (inflate +
+    mosaic on decode).  Stats come from the DECODED pixels and RECOVERED
+    tags, so the oracle's arithmetic raster gates IFD math, tile order,
+    compression, and the geo-tag plumbing at once."""
+    return _roundtrip(
+        spark, sf_dir, _TILED, ("n_tiles", "tile_edge", "compression"),
+        "geotiff_tiled_store",
     )

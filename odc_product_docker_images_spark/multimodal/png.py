@@ -32,7 +32,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from ..io import load
+from ..io import fanout, load
 from ..registry import register
 
 _W, _H = 16, 10
@@ -286,7 +286,7 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     dc = load(spark, sf_dir, "documents")
     return (
         dc.select("doc_id")
-        .repartition(8, "doc_id")
+        .repartition(fanout(spark), "doc_id")
         .mapInPandas(
             _png_decode_batches,
             schema=(

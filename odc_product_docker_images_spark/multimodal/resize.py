@@ -28,7 +28,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from ..io import load
+from ..io import fanout, load
 from ..registry import register
 from .columns import _BMP_A, _BMP_B, _BMP_C, _BMP_H, _BMP_W, _decode_bmp, _pack_bmp
 
@@ -108,7 +108,7 @@ def multimodal_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     dc = load(spark, sf_dir, "documents")
     return (
         dc.select("doc_id")
-        .repartition(8, "doc_id")
+        .repartition(fanout(spark), "doc_id")
         .mapInPandas(
             _resize_batches,
             schema=(

@@ -158,8 +158,6 @@ def profile_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
 # width 16 over [-128, 127].
 
 _EB_NBINS = 16
-_EB_SMOOTH_NUM = 0.5
-_EB_SMOOTH_DEN = float(_EB_NBINS) * 0.5  # 8.0
 
 _EP_REF = "((n_ref + CAST(0.5 AS DOUBLE)) / (tot_ref + CAST(8.0 AS DOUBLE)))"
 _EP_CAND = "((n_cand + CAST(0.5 AS DOUBLE)) / (tot_cand + CAST(8.0 AS DOUBLE)))"

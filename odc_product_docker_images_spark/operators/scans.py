@@ -150,9 +150,10 @@ def filter_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.where(crossings % 2 == 1).select("event_id", "user_id", "value")
 
 
-@register(
-    "source_tile_scan",
-    oracle=f"""
+# Both tile sources synthesize or decode the same pixels, so both scans
+# share one oracle: DuckDB regenerates the pixels from RANGE and runs the
+# same composite.
+_TILE_SCAN_ORACLE = f"""
         WITH px AS (
             SELECT a.range AS y, b.range AS x,
                    CAST((a.range * 31 + b.range * 17) % 255 AS DOUBLE) AS red,
@@ -164,29 +165,21 @@ def filter_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
                {sql_davg("(nir - red) / (nir + red + 1e-9)", "mean_ndvi")},
                COUNT(*) AS n_px
         FROM px GROUP BY 1, 2
-    """,
-)
-def source_tile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S2: the Datacube.load pipeline on the custom Python DataSource —
-    per-tile parallel read → NDVI band math → regrid (floor-divide grid
-    binning, the GeoBox cell-id trick) → per-cell composite.  One shuffle
-    (the regrid groupBy); tile reads are independent executor tasks.
+    """
 
-    The source's pixel formula is deterministic integer arithmetic
-    (tile_source.py), so the WHOLE pipeline carries a full value-hash
-    oracle: DuckDB regenerates the pixels from RANGE and runs the same
-    composite.  Cross-engine traps handled: explicit FLOOR before the
-    BIGINT cast (DuckDB's double→int cast ROUNDS, Spark's truncates) and
-    the cell mean through the exact decimal path (a bare AVG of doubles is
-    summation-order-dependent)."""
+
+def _ndvi_cells(spark: SparkSession, source: str, **options: str) -> DataFrame:
+    """Read 4×4 tiles of 32² pixels from a tile source, then NDVI band
+    math → regrid (floor-divide grid binning, the GeoBox cell-id trick) →
+    per-cell composite.  One shuffle (the regrid groupBy); tile reads are
+    independent executor tasks."""
     from ..sources.tile_source import TILE_SCHEMA, register_tile_source
 
     register_tile_source(spark)
     px = (
-        spark.read.format("synthetic_tiles")
+        spark.read.format(source)
         .schema(TILE_SCHEMA)
-        .option("tiles", "4")
-        .option("tile_size", "32")
+        .options(tiles="4", tile_size="32", **options)
         .load()
     )
     ndvi = (px["nir"] - px["red"]) / (px["nir"] + px["red"] + F.lit(1e-9))
@@ -202,57 +195,36 @@ def source_tile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "source_tile_scan_tiff",
-    oracle=f"""
-        WITH px AS (
-            SELECT a.range AS y, b.range AS x,
-                   CAST((a.range * 31 + b.range * 17) % 255 AS DOUBLE) AS red,
-                   CAST((a.range * 13 + b.range * 41) % 255 AS DOUBLE) AS nir
-            FROM RANGE(0, 128) a CROSS JOIN RANGE(0, 128) b
-        )
-        SELECT CAST(FLOOR(y / 16) AS BIGINT) AS cell_y,
-               CAST(FLOOR(x / 16) AS BIGINT) AS cell_x,
-               {sql_davg("(nir - red) / (nir + red + 1e-9)", "mean_ndvi")},
-               COUNT(*) AS n_px
-        FROM px GROUP BY 1, 2
-    """,
-)
+@register("source_tile_scan", oracle=_TILE_SCAN_ORACLE)
+def source_tile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """S2: the Datacube.load pipeline on the custom Python DataSource —
+    per-tile parallel read → NDVI band math → regrid → per-cell composite.
+
+    The source's pixel formula is deterministic integer arithmetic
+    (tile_source.py), so the WHOLE pipeline carries a full value-hash
+    oracle.  Cross-engine traps handled: explicit FLOOR before the
+    BIGINT cast (DuckDB's double→int cast ROUNDS, Spark's truncates) and
+    the cell mean through the exact decimal path (a bare AVG of doubles is
+    summation-order-dependent)."""
+    return _ndvi_cells(spark, "synthetic_tiles")
+
+
+@register("source_tile_scan_tiff", oracle=_TILE_SCAN_ORACLE)
 def source_tile_scan_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2: ``source_tile_scan``'s pipeline with the GDAL-shaped read made
     REAL — each DataSource partition opens and decodes actual striped
-    GeoTIFF blobs (the ``multimodal/geotiff.py`` walker: header, IFD,
+    GeoTIFF blobs (the ``multimodal/geotiff.py`` reader: header, IFD,
     out-of-line strip offset/byte-count arrays, geo tags) instead of
     synthesizing pixels arithmetically.  The blob store is generated
     write-once from the SAME deterministic formula, so the DuckDB RANGE
     oracle still hashes the WHOLE pipeline end-to-end: a codec bug
     (wrong strip order, endianness, offset arithmetic) lands in the
     pixel values and flips the hash row.  Per-tile decode tasks are
-    independent executors reads — the Datacube.load / GDAL fan-out
+    independent executor reads — the Datacube.load / GDAL fan-out
     shape; at 100 TB the blob dir is the object bucket."""
-    from ..sources.tile_source import TILE_SCHEMA, ensure_tiff_tiles, register_tile_source
+    from ..sources.tile_source import ensure_tiff_tiles
 
-    blob_dir = ensure_tiff_tiles(tiles=4, tile_size=32)
-    register_tile_source(spark)
-    px = (
-        spark.read.format("tiff_tiles")
-        .schema(TILE_SCHEMA)
-        .option("path", blob_dir)
-        .option("tiles", "4")
-        .option("tile_size", "32")
-        .load()
-    )
-    ndvi = (px["nir"] - px["red"]) / (px["nir"] + px["red"] + F.lit(1e-9))
-    cell = [F.floor(F.col("y") / 16).cast("long").alias("cell_y"),
-            F.floor(F.col("x") / 16).cast("long").alias("cell_x")]
-    return (
-        px.select(*cell, ndvi.alias("ndvi"))
-        .groupBy("cell_y", "cell_x")
-        .agg(
-            davg("ndvi", "mean_ndvi"),
-            F.count(F.lit(1)).alias("n_px"),
-        )
-    )
+    return _ndvi_cells(spark, "tiff_tiles", path=ensure_tiff_tiles(tiles=4, tile_size=32))
 
 
 @register(

@@ -93,7 +93,6 @@ _MODULES = [
     "odc_product_docker_images_spark.operators.trend",
     "odc_product_docker_images_spark.textvec.semantic",
     "odc_product_docker_images_spark.textvec.lr_filter",
-    "odc_product_docker_images_spark.multimodal.geotiff_tiled",
     "odc_product_docker_images_spark.operators.changepoint",
     "odc_product_docker_images_spark.operators.joins_polygon",
     "odc_product_docker_images_spark.operators.reproject_inverse",

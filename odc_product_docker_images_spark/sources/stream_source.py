@@ -36,6 +36,10 @@ from ..registry import register
 _BATCHES = 6
 _ROWS = 200
 
+# The feed's rows.  ``source_stream_feed`` passes it to ``readStream.schema``:
+# a Python source asked for its schema at load time starts a Python worker.
+FEED_SCHEMA = "batch int, sensor int, value double"
+
 
 class _OffsetRange(InputPartition):
     def __init__(self, batch: int):
@@ -84,7 +88,7 @@ class SyntheticFeedSource(DataSource):
         return "synthetic_feed"
 
     def schema(self) -> str:
-        return "batch int, sensor int, value double"
+        return FEED_SCHEMA
 
     def streamReader(self, schema: StructType) -> DataSourceStreamReader:
         return FeedStreamReader(self.options)
@@ -127,6 +131,7 @@ def source_stream_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact batch count and streaming-safe (oracle mirrors it).
     agg = (
         spark.readStream.format("synthetic_feed")
+        .schema(FEED_SCHEMA)
         .load()
         .groupBy("sensor")
         .agg(

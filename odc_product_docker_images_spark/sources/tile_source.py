@@ -9,8 +9,12 @@ independently on an executor — embarrassingly parallel, no driver
 bottleneck, exactly how a raster-ingest bridge would be wired when real
 GDAL bindings exist.
 
-The pixel values are a deterministic function of (tile, y, x, band) so
-tests can assert exact content; a real deployment swaps `_tile_pixels`
+Two source names share one reader.  ``synthetic_tiles`` takes each band's
+raster from a deterministic function of (tile, y, x, band); ``tiff_tiles``
+opens and decodes one GeoTIFF blob per (tile, band), written from the same
+function by the ``multimodal/geotiff.py`` codec.  Either way a read task
+emits its tile as one Arrow ``RecordBatch``, so tests and the DuckDB
+oracle can assert exact content; a real deployment swaps the blob store
 for rasterio reads.
 """
 
@@ -32,50 +36,9 @@ class TilePartition(InputPartition):
         self.tile_y = tile_y
 
 
-class SyntheticTileReader(DataSourceReader):
-    def __init__(self, options: dict):
-        self.tiles = int(options.get("tiles", "4"))
-        self.tile_size = int(options.get("tile_size", "32"))
-
-    def partitions(self) -> list[InputPartition]:
-        # one read task per tile — the master's tile×time job fan-out
-        return [TilePartition(tx, ty) for tx in range(self.tiles) for ty in range(self.tiles)]
-
-    def read(self, partition: TilePartition) -> Iterator[tuple]:
-        n = self.tile_size
-        base_y = partition.tile_y * n
-        base_x = partition.tile_x * n
-        for yy in range(n):
-            for xx in range(n):
-                y, x = base_y + yy, base_x + xx
-                # deterministic 'bands' (stand-in for GDAL pixel reads)
-                red = float((y * 31 + x * 17) % 255)
-                nir = float((y * 13 + x * 41) % 255)
-                yield (partition.tile_x, partition.tile_y, y, x, red, nir)
-
-
-class SyntheticTileSource(DataSource):
-    @classmethod
-    def name(cls) -> str:
-        return "synthetic_tiles"
-
-    def schema(self) -> str:
-        return TILE_SCHEMA
-
-    def reader(self, schema: StructType) -> DataSourceReader:
-        return SyntheticTileReader(self.options)
-
-
-class TiffTilePartition(InputPartition):
-    def __init__(self, tile_x: int, tile_y: int):
-        self.tile_x = tile_x
-        self.tile_y = tile_y
-
-
 def _tile_band_raster(tile_x: int, tile_y: int, n: int, band: str):
-    """The deterministic per-band pixel raster (uint16) — the SAME
-    arithmetic ``SyntheticTileReader`` yields row-by-row, so the DuckDB
-    RANGE oracle covers both sources."""
+    """The deterministic per-band pixel raster (uint16) of one tile — the
+    arithmetic the DuckDB RANGE oracle regenerates for both sources."""
     import numpy as np
 
     y = np.arange(tile_y * n, (tile_y + 1) * n, dtype=np.int64)[:, None]
@@ -108,64 +71,73 @@ def ensure_tiff_tiles(tiles: int = 4, tile_size: int = 32) -> str:
     return artifact("tiff_tiles", build, f"{tiles}x{tile_size}")
 
 
-class TiffTileReader(DataSourceReader):
-    """GDAL-shaped read path: each partition OPENS AND DECODES real TIFF
-    blobs (the ``multimodal/geotiff.py`` strip walker — header, IFD,
-    out-of-line offset/byte-count arrays, geo tags) instead of
-    synthesizing pixels arithmetically.  One (tile × 2 bands) decode per
-    read task, embarrassingly parallel, no driver involvement."""
+class TileReader(DataSourceReader):
+    """One read task per tile — the master's tile×time job fan-out.  With
+    a ``blob_dir`` each task OPENS AND DECODES its two band blobs (the
+    GDAL-shaped read path: header, IFD, out-of-line offset/byte-count
+    arrays, geo tags); without one it synthesizes them arithmetically."""
 
-    def __init__(self, options: dict):
-        self.blob_dir = options["path"]
+    def __init__(self, options: dict, blob_dir: str | None):
+        self.blob_dir = blob_dir
         self.tiles = int(options.get("tiles", "4"))
         self.tile_size = int(options.get("tile_size", "32"))
 
     def partitions(self) -> list[InputPartition]:
-        return [
-            TiffTilePartition(tx, ty)
-            for tx in range((self.tiles))
-            for ty in range(self.tiles)
-        ]
+        return [TilePartition(tx, ty) for tx in range(self.tiles) for ty in range(self.tiles)]
 
-    def read(self, partition: TiffTilePartition) -> Iterator[tuple]:
+    def _band(self, tx: int, ty: int, band: str):
+        n = self.tile_size
+        if self.blob_dir is None:
+            return _tile_band_raster(tx, ty, n, band)
         from pathlib import Path
 
         from ..multimodal.geotiff import _decode_tiff
 
-        n = self.tile_size
-        tx, ty = partition.tile_x, partition.tile_y
-        rasters = {}
-        for band in ("red", "nir"):
-            payload = (Path(self.blob_dir) / f"tile_{tx}_{ty}_{band}.tif").read_bytes()
-            w, h, raster, _ps, _tp, _gk = _decode_tiff(payload)
-            if (w, h) != (n, n):
-                raise ValueError(f"tile blob {tx},{ty},{band}: {w}x{h} != {n}x{n}")
-            rasters[band] = raster
-        base_y, base_x = ty * n, tx * n
-        for yy in range(n):
-            red_row = rasters["red"][yy]
-            nir_row = rasters["nir"][yy]
-            for xx in range(n):
-                yield (
-                    tx,
-                    ty,
-                    base_y + yy,
-                    base_x + xx,
-                    float(red_row[xx]),
-                    float(nir_row[xx]),
-                )
+        payload = (Path(self.blob_dir) / f"tile_{tx}_{ty}_{band}.tif").read_bytes()
+        w, h, raster, _ps, _tp, _gk = _decode_tiff(payload)
+        if (w, h) != (n, n):
+            raise ValueError(f"tile blob {tx},{ty},{band}: {w}x{h} != {n}x{n}")
+        return raster
+
+    def read(self, partition: TilePartition) -> Iterator:
+        import numpy as np
+        import pyarrow as pa
+
+        n, tx, ty = self.tile_size, partition.tile_x, partition.tile_y
+        y, x = np.mgrid[ty * n : (ty + 1) * n, tx * n : (tx + 1) * n].astype(np.int64)
+        red, nir = (self._band(tx, ty, b).ravel().astype(np.float64) for b in ("red", "nir"))
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(np.full(n * n, tx, dtype=np.int32)),
+                pa.array(np.full(n * n, ty, dtype=np.int32)),
+                pa.array(y.ravel()),
+                pa.array(x.ravel()),
+                pa.array(red),
+                pa.array(nir),
+            ],
+            names=["tile_x", "tile_y", "y", "x", "red", "nir"],
+        )
 
 
-class TiffTileSource(DataSource):
+class SyntheticTileSource(DataSource):
     @classmethod
     def name(cls) -> str:
-        return "tiff_tiles"
+        return "synthetic_tiles"
 
     def schema(self) -> str:
         return TILE_SCHEMA
 
     def reader(self, schema: StructType) -> DataSourceReader:
-        return TiffTileReader(self.options)
+        return TileReader(self.options, None)
+
+
+class TiffTileSource(SyntheticTileSource):
+    @classmethod
+    def name(cls) -> str:
+        return "tiff_tiles"
+
+    def reader(self, schema: StructType) -> DataSourceReader:
+        return TileReader(self.options, self.options["path"])
 
 
 def register_tile_source(spark) -> None:

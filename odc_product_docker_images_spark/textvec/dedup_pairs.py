@@ -34,7 +34,6 @@ from ..registry import register
 from .shingle import _shingles
 
 _HAM_K = 3  # exact-recall threshold: k < B bands of the 64-bit signature
-_BANDS = 4
 
 
 @register(

@@ -225,6 +225,42 @@ def _lsh_bucket_batches(it):
         )
 
 
+def bucket_pairs(pdf):
+    """Exact-cosine verify of one ANN bucket (``sim_ann_lsh``'s (table,
+    bucket) cells, ``sim_ann_ivf``'s probe buckets): unit vectors ``uv``
+    in, every (vec_a < vec_b) pair with cos ≥ 0.4 out, as one dense BLAS
+    block per chunk."""
+    import numpy as np
+    import pandas as pd
+
+    if len(pdf) < 2:
+        return pd.DataFrame({"vec_a": [], "vec_b": [], "cos": []})
+    pdf = pdf.sort_values("vec_id")
+    ids = pdf["vec_id"].to_numpy()
+    M = np.stack(pdf["uv"].to_numpy())
+    # CHUNKED verify (r9): a hot bucket on a big corpus made the full
+    # n×n product multi-GB per task and the worker OOM'd at the 100×
+    # fixture (kernel-killed, 10.7 GB RSS).  Chunk the query rows so
+    # the dense block stays ~64 MB; each output cell is an
+    # independent dot product, so results are bit-identical.
+    step = max(1, (8 << 20) // max(1, len(ids)))
+    out_a, out_b, out_c = [], [], []
+    for s in range(0, len(ids), step):
+        C = M[s : s + step] @ M.T
+        i, j = np.nonzero(C >= 0.4)
+        keep = j > (i + s)  # ids sorted → global row < col ⇔ vec_a < vec_b
+        out_a.append(ids[i[keep] + s])
+        out_b.append(ids[j[keep]])
+        out_c.append(C[i[keep], j[keep]])
+    return pd.DataFrame(
+        {
+            "vec_a": np.concatenate(out_a) if out_a else [],
+            "vec_b": np.concatenate(out_b) if out_b else [],
+            "cos": np.concatenate(out_c) if out_c else [],
+        }
+    )
+
+
 @register("sim_ann_lsh")  # ⊘oracle: approximate by construction; recall tested in pytest
 def sim_ann_lsh(
     spark: SparkSession, sf_dir: str, audit_pct: int | None = None
@@ -256,8 +292,6 @@ def sim_ann_lsh(
     production candidate set restricted to slice×slice pairs; the
     recall gate's semi-join against slice truth is identical at a
     fraction of the verify FLOPs."""
-    import pandas as pd
-
     from .pipeline import _AUDIT_N0_VEC, audit_gate
 
     em = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -271,36 +305,6 @@ def sim_ann_lsh(
         _lsh_bucket_batches,
         schema="vec_id long, table int, bucket int, uv array<double>",
     )
-
-    def bucket_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        if len(pdf) < 2:
-            return pd.DataFrame({"vec_a": [], "vec_b": [], "cos": []})
-        pdf = pdf.sort_values("vec_id")
-        ids = pdf["vec_id"].to_numpy()
-        M = np.stack(pdf["uv"].to_numpy())
-        # CHUNKED verify (r9): a hot bucket on a big corpus made the full
-        # n×n product multi-GB per task and the worker OOM'd at the 100×
-        # fixture (kernel-killed, 10.7 GB RSS).  Chunk the query rows so
-        # the dense block stays ~64 MB; each output cell is an
-        # independent dot product, so results are bit-identical.
-        step = max(1, (8 << 20) // max(1, len(ids)))
-        out_a, out_b, out_c = [], [], []
-        for s in range(0, len(ids), step):
-            C = M[s : s + step] @ M.T
-            i, j = np.nonzero(C >= 0.4)
-            keep = j > (i + s)  # ids sorted → global row < col ⇔ vec_a < vec_b
-            out_a.append(ids[i[keep] + s])
-            out_b.append(ids[j[keep]])
-            out_c.append(C[i[keep], j[keep]])
-        return pd.DataFrame(
-            {
-                "vec_a": np.concatenate(out_a) if out_a else [],
-                "vec_b": np.concatenate(out_b) if out_b else [],
-                "cos": np.concatenate(out_c) if out_c else [],
-            }
-        )
 
     cand = sig.groupBy("table", "bucket").applyInPandas(
         bucket_pairs, schema="vec_a long, vec_b long, cos double"

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from ..io import load, table_rows
 from ..registry import register
-from .similarity import dot, with_norm
+from .similarity import bucket_pairs, dot, with_norm
 
 _K = 16
 _NPROBE = 3
@@ -87,9 +87,6 @@ def sim_ann_ivf(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    import numpy as np
-    import pandas as pd
-
     n = with_norm(load(spark, sf_dir, "embeddings"))
     if audit_pct is not None:
         # gate-only knob: count-bounded Knuth slice.  Unlike LSH, IVF
@@ -140,32 +137,6 @@ def sim_ann_ivf(
     dots = _dots_to_centers(F.col("uv"), centers)
     b = _top_buckets(dots, _NPROBE)
     both = unit.select("vec_id", "uv", F.explode(F.array(*b)).alias("bucket"))
-
-    def bucket_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:
-            return pd.DataFrame({"vec_a": [], "vec_b": [], "cos": []})
-        pdf = pdf.sort_values("vec_id")
-        ids = pdf["vec_id"].to_numpy()
-        M = np.stack(pdf["uv"].to_numpy())
-        # CHUNKED verify (r9, the sim_ann_lsh fix): bound the dense block
-        # at ~64 MB so a hot bucket on a big corpus can't OOM the worker;
-        # chunked rows are independent dot products — bit-identical.
-        step = max(1, (8 << 20) // max(1, len(ids)))
-        out_a, out_b, out_c = [], [], []
-        for s in range(0, len(ids), step):
-            C = M[s : s + step] @ M.T
-            i, j = np.nonzero(C >= 0.4)
-            keep = j > (i + s)  # ids sorted → global row < col ⇔ vec_a < vec_b
-            out_a.append(ids[i[keep] + s])
-            out_b.append(ids[j[keep]])
-            out_c.append(C[i[keep], j[keep]])
-        return pd.DataFrame(
-            {
-                "vec_a": np.concatenate(out_a) if out_a else [],
-                "vec_b": np.concatenate(out_b) if out_b else [],
-                "cos": np.concatenate(out_c) if out_c else [],
-            }
-        )
 
     cand = both.groupBy("bucket").applyInPandas(
         bucket_pairs, schema="vec_a long, vec_b long, cos double"

@@ -2,13 +2,15 @@
 
 Every registered query key with an oracle is compared at sf0.001 (fast);
 run with ``SPARK_GRAFT_TEST_SF_DIR=/root/testdata/sf0.01`` to mirror the
-driver exactly.  Keys without an oracle get a smoke check (runs, stable
-schema: the plan's column names, and a non-empty result).
+driver exactly.  Every key's output columns must be hashable scalars.
+Keys without an oracle get a smoke check (runs, stable schema: the plan's
+column names, and a non-empty result).
 """
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import types as T
 
 from tools.check_parity import canon_rows, compare, duck_con
 
@@ -18,6 +20,12 @@ from odc_product_docker_images_spark import registry
 # Keys without an oracle whose result may be empty at the test scale, each
 # with a one-line reason.  None today: all of them return rows at sf0.001.
 _EMPTY_OK: dict[str, str] = {}
+
+# The driver's canonicalizer converts the result to pandas and sorts and
+# hashes every cell; array/map/struct columns arrive as ndarray/dict cells
+# and raise ``TypeError: unhashable type`` — a hard red row regardless of
+# the math (this killed ``agg_approx_percentile`` in round 1).
+_UNHASHABLE = (T.ArrayType, T.MapType, T.StructType)
 
 
 def _keys():
@@ -35,6 +43,12 @@ def duck(sf_dir):
 def test_query_parity(key, spark, sf_dir, duck):
     q = registry.all_queries()[key]
     df = q.fn(spark, sf_dir)
+    bad = [
+        f"{f.name}:{f.dataType.simpleString()}"
+        for f in df.schema.fields
+        if isinstance(f.dataType, _UNHASHABLE)
+    ]
+    assert not bad, f"{key}: non-scalar output columns break the driver gate: {bad}"
     sdf = df.toPandas()
     if q.oracle is None:
         assert list(sdf.columns) == df.schema.names

@@ -669,25 +669,14 @@ def test_lr_step_is_one_scan_one_aggregate(spark):
 
 
 def test_tiled_geotiff_sink_prunes_and_blocks_by_scene(spark):
-    """The tiled sink's compute side: composite prunes to the three cell
-    columns and the codec runs per scene as applyInPandas — no row-UDF."""
-    from odc_product_docker_images_spark.multimodal.geotiff_tiled import (
-        _encode_scenes,  # noqa: F401 — import check only
-    )
-    from odc_product_docker_images_spark.io import load
-    from pyspark.sql import functions as F
+    """The tiled sink's compute side: the composite the key itself builds
+    (the shared builder's, clamped to the scene) prunes to the three cell
+    columns and is one shuffle."""
+    from odc_product_docker_images_spark.multimodal.geotiff import _TILED, _cells
 
     # pin the composite prefix (the sink itself writes to .tmp, so audit
     # the pre-write plan the same way PLANS.md does for the striped sink)
-    cells = (
-        load(spark, SF, "events")
-        .groupBy(
-            "event_type",
-            F.floor(F.col("value") / F.lit(12.5)).alias("x"),
-            F.floor(F.col("user_id") / F.lit(50.0)).alias("y"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    cells = _cells(spark, SF, _TILED)
     C.assert_columns_pruned(cells, {"event_type", "user_id", "value"})
     assert C.exchange_count(cells) == 1
 

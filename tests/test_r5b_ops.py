@@ -18,14 +18,14 @@ def test_tiled_geotiff_codec_roundtrips_and_validates():
     """Tiles must mosaic back losslessly in row-major order, geo tags must
     recover, and the decoder must reject containers it can't honestly
     read (wrong magic, wrong compression)."""
-    from odc_product_docker_images_spark.multimodal.geotiff_tiled import (
+    from odc_product_docker_images_spark.multimodal.geotiff import (
         _EPSG,
         _H,
-        _SCALE,
-        _TIEPOINT,
         _TILE,
+        _TILED_SCALE as _SCALE,
+        _TILED_TIEPOINT as _TIEPOINT,
         _W,
-        _decode_tiled,
+        _decode_tiff as _decode_tiled,
         _pack_tiled,
     )
 

@@ -48,6 +48,7 @@ from collections.abc import Iterator
 from itertools import accumulate
 from typing import NamedTuple
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -92,12 +93,14 @@ class _Grid(NamedTuple):
 
     def pack(self, raster) -> bytes:
         """Encode a (h, w) uint16 raster as a classic TIFF in this grid's
-        layout and geo tags (tiled sides must be tile multiples).  The
-        offset / byte-count arrays, the two double vectors and the GeoKey
-        directory live out of line after the IFD, then the blocks."""
+        layout and geo tags.  The offset / byte-count arrays, the two
+        double vectors and the GeoKey directory live out of line after the
+        IFD, then the blocks; a single block's offset and byte count fit
+        their entries' value fields, so they are written inline."""
         h, w = raster.shape
         px, t = raster.astype("<u2"), self.tile
-        if t:  # row-major tile order, per the spec
+        if t:  # row-major tile order; edge tiles padded to full size, per the spec
+            px = np.pad(px, ((0, -h % t), (0, -w % t)))
             blocks = [
                 zlib.compress(px[y : y + t, x : x + t].tobytes(), 6)
                 for y in range(0, h, t)
@@ -111,8 +114,9 @@ class _Grid(NamedTuple):
             offs_tag, counts_tag, compression = 273, 279, 1  # none
         n = len(blocks)
         counts = [len(b) for b in blocks]
+        arrays = n if n > 1 else 0  # out-of-line offset / byte-count entries
         aux = 8 + 2 + 12 * (12 + len(layout)) + 4  # header, IFD, next-IFD link
-        ps = aux + 8 * n  # after the offset and byte-count arrays
+        ps = aux + 8 * arrays  # after the offset and byte-count arrays
         data = ps + 24 + 48 + 32  # after the pixel scale, tiepoint and GeoKeys
         entries = sorted(  # ascending tag order, as the spec requires
             [
@@ -122,8 +126,8 @@ class _Grid(NamedTuple):
                 (259, _SHORT, 1, compression),
                 (262, _SHORT, 1, 1),  # Photometric = BlackIsZero
                 (277, _SHORT, 1, 1),  # SamplesPerPixel
-                (offs_tag, _LONG, n, aux),
-                (counts_tag, _LONG, n, aux + 4 * n),
+                (offs_tag, _LONG, n, aux if arrays else data),
+                (counts_tag, _LONG, n, aux + 4 * n if arrays else counts[0]),
                 (339, _SHORT, 1, 1),  # SampleFormat = unsigned int
                 (33550, _DOUBLE, 3, ps),  # ModelPixelScale
                 (33922, _DOUBLE, 6, ps + 24),  # ModelTiepoint
@@ -138,10 +142,10 @@ class _Grid(NamedTuple):
             else:
                 out += struct.pack("<HHII", tag, typ, cnt, val)
         out += struct.pack(
-            f"<I{n}I{n}I3d6d16H",
+            f"<I{arrays}I{arrays}I3d6d16H",
             0,  # no next IFD
-            *accumulate(counts[:-1], initial=data),
-            *counts,
+            *(accumulate(counts[:-1], initial=data) if arrays else ()),
+            *(counts if arrays else ()),
             *self.scale,
             *self.tiepoint,
             *_GEOKEYS,
@@ -161,8 +165,6 @@ def _read(payload: bytes):
     per spec), validate the layout the tags claim, inflate tiles, and
     reassemble the blocks row-major, cropping tile padding back to
     (ImageLength, ImageWidth).  Returns (tag → values, raster uint16)."""
-    import numpy as np
-
     if payload[:4] != b"II*\x00":
         raise NotImplementedError(f"unsupported container: {payload[:4]!r}")
     (ifd_off,) = struct.unpack_from("<I", payload, 4)
@@ -213,8 +215,6 @@ def _decode_tiff(payload: bytes):
 
 def _encode_scene(grid: _Grid, pdf: pd.DataFrame) -> pd.DataFrame:
     """One scene's composite cells (x, y, n) → its GeoTIFF payload."""
-    import numpy as np
-
     raster = np.zeros((grid.h, grid.w), dtype=np.uint16)
     x = pdf["x"].to_numpy(np.int64)
     y = pdf["y"].to_numpy(np.int64)
@@ -235,8 +235,6 @@ _LAYOUT_COLUMNS = {
 
 
 def _decode_scenes(layout: tuple, it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
     for pdf in it:
         rows = []
         for et, payload in zip(pdf["event_type"], pdf["payload"]):

@@ -33,6 +33,7 @@ from ..io import fanout, load, table_rows
 from ..registry import register
 from .pipeline import _AUDIT_N0_DOC, _AUDIT_N0_VEC, audit_gate, sql_audit_gate
 from .shingle import _shingles
+from .similarity import _unit_rows
 
 
 @register(
@@ -117,16 +118,99 @@ _MH_K = 64  # minhash functions
 _MH_B, _MH_R = 16, 4  # bands × rows: s-curve threshold (1/B)^(1/R) = 0.5
 # audit-gate n0 thresholds live in pipeline.py beside audit_gate (r9b)
 
+# Spark's XXH64 (org.apache.spark.sql.catalyst.expressions.XXH64) for 4-
+# and 8-byte inputs, in wrapping uint64 numpy arithmetic: bit-identical to
+# ``F.xxhash64``, which chains multi-column hashes from seed 42 as
+# h = hash(c1, 42), then hash(c2, h), ...
+_P1, _P2, _P3, _P4, _P5 = (
+    np.uint64(p)
+    for p in (
+        0x9E3779B185EBCA87,
+        0xC2B2AE3D27D4EB4F,
+        0x165667B19E3779F9,
+        0x85EBCA77C2B2AE63,
+        0x27D4EB2F165667C5,
+    )
+)
+_XXH_SEED = np.uint64(42)
+
+
+def _rotl(x: np.ndarray, r: int) -> np.ndarray:
+    return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
+
+
+def _fmix(h: np.ndarray) -> np.ndarray:
+    h = (h ^ (h >> np.uint64(33))) * _P2
+    h = (h ^ (h >> np.uint64(29))) * _P3
+    return h ^ (h >> np.uint64(32))
+
+
+def _xxh64_int(x, seed) -> np.ndarray:
+    """``XXH64.hashInt``: int32 values, uint64 seeds → uint64 hashes."""
+    with np.errstate(over="ignore"):
+        h = seed + _P5 + np.uint64(4)
+        h = h ^ np.asarray(x, np.int32).view(np.uint32).astype(np.uint64) * _P1
+        return _fmix(_rotl(h, 23) * _P2 + _P3)
+
+
+def _xxh64_long(x, seed) -> np.ndarray:
+    """``XXH64.hashLong``: int64/uint64 values, uint64 seeds → uint64 hashes."""
+    with np.errstate(over="ignore"):
+        h = seed + _P5 + np.uint64(8)
+        h = h ^ _rotl(np.asarray(x).view(np.uint64) * _P2, 31) * _P1
+        return _fmix(_rotl(h, 27) * _P1 + _P4)
+
+
+# hash function i is xxhash64(i, hs): hashLong(hs, hashInt(i, 42))
+_MH_SEEDS = _xxh64_int(np.arange(_MH_K), _XXH_SEED)
+
+
+def _minhash_bands(batches):
+    """One Arrow pass per batch of per-document shingle-hash sets
+    ``(doc_id, hs array<long>)``: the K minima of ``xxhash64(i, hs)``
+    (signed, as Spark's ``min``) as K vectorized passes over the flat
+    values buffer (``minimum.reduceat`` over the list offsets), then the
+    B band signatures ``xxhash64(m[R·b], …, m[R·b+R-1])``; emits
+    ``(doc_id, band, sig)``, B rows per document."""
+    import pyarrow as pa
+
+    bands = np.arange(_MH_B, dtype=np.int32)
+    for batch in batches:
+        n = batch.num_rows
+        if n == 0:
+            continue
+        sets = batch.column("hs")
+        off = sets.offsets.to_numpy()
+        hs = sets.values.to_numpy()[off[0] : off[-1]]
+        starts = off[:-1] - off[0]
+        mins = np.empty((n, _MH_K), np.uint64)
+        for i, seed in enumerate(_MH_SEEDS):
+            mins[:, i] = np.minimum.reduceat(
+                _xxh64_long(hs, seed).view(np.int64), starts
+            ).view(np.uint64)
+        rows = mins.reshape(n, _MH_B, _MH_R)
+        sig = np.full((n, _MH_B), _XXH_SEED)
+        for r in range(_MH_R):
+            sig = _xxh64_long(rows[:, :, r], sig)
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(np.repeat(batch.column("doc_id").to_numpy(), _MH_B)),
+                pa.array(np.tile(bands, n)),
+                pa.array(sig.view(np.int64).ravel()),
+            ],
+            names=["doc_id", "band", "sig"],
+        )
+
 
 @register("dedup_minhash")  # ⊘oracle: banded LSH is approximate by construction
 def dedup_minhash(
     spark: SparkSession, sf_dir: str, audit_pct: int | None = None
 ) -> DataFrame:
     """X2: MinHash+LSH near-dup pairs, the scale-ready banded design:
-    explode shingles → K=64 seeded xxhash64 per shingle ROW → minhash =
-    64 MIN aggregates per doc (one hash-agg) → 16 band signatures of 4
-    rows → explode bands → bucket equi-join for candidates → verify with
-    EXACT set Jaccard (array_intersect) → filter.
+    shingles → one xxhash64 per shingle → one int64 hash set per doc →
+    K=64 minima and B=16 band signatures of R=4 rows in one Arrow
+    pass → doc pairs sharing a (band, sig) bucket as candidates → verify with
+    EXACT set Jaccard (array_intersect over the int64 sets) → filter.
 
     ``audit_pct`` (gate-only knob, not part of the registered key):
     restrict the corpus to the deterministic Knuth-hash doc slice before
@@ -138,15 +222,18 @@ def dedup_minhash(
     of the cost (``dedup_minhash_recall``).
 
     Two deliberate shapes:
-    - Row-wise hashing then MIN-aggregate, NOT array_min over 64 nested
-      transforms: projection collapse would inline the shingle-builder
-      into each of the 64 lambdas — a pathological expression tree
-      (measured 60s; this form ~2s).
+    - The K hash functions are int mixes of ONE 64-bit shingle hash
+      (``xxhash64(i, hs)``), evaluated as whole-array numpy passes over
+      each document's hash set, not as K rows per shingle through a
+      (doc_id, i) min-aggregate: the shuffle carries one hash-set row
+      per document, and no row form ever multiplies the shingles by K.
+      The numpy XXH64 port reproduces Spark's ``xxhash64`` bit for bit,
+      so the signatures equal the Catalyst row form's.
     - Banding with R=4 rows: candidate probability 1-(1-j⁴)¹⁶, a steep
       s-curve at j≈0.5.  ``ml.MinHashLSH``'s single-hash bands make
       candidate probability equal RAW Jaccard — floods the verifier on a
       high-base-similarity corpus (dedup_minhash_ml, kept for contrast).
-    At 100 TB: shuffle = shingle rows + n·B band rows; no n² anywhere."""
+    At 100 TB: shuffle = n hash sets + n·B band rows; no n² anywhere."""
     dc = load(spark, sf_dir, "documents")
     if audit_pct is not None:
         # gate count = PRE-filter table count = footer row count (r13, §5)
@@ -155,73 +242,57 @@ def dedup_minhash(
         )
     # Two deliberate repartitions around the shingle builder:
     # - BEFORE: the fixture is one parquet file = one partition, and the
-    #   builder (concat_ws × positions + array_distinct + explode) is the
-    #   single most expensive projection in the plan — round-robin it
-    #   across tasks or it runs serially (measured 4.8s of the 8.4s key).
-    # - AFTER: the hash(doc_id) Exchange is REUSED by both consumers of
-    #   `ex` (signature agg and verification sets), so the builder still
-    #   runs exactly once and both groupBys need no further shuffle — do
+    #   builder (concat_ws × positions + array_distinct) is the single
+    #   most expensive projection in the plan — round-robin it across
+    #   tasks or it runs serially (measured 4.8s of the 8.4s key).  The
+    #   token-count filter (≥3 tokens ⇔ ≥1 shingle, so no set is empty)
+    #   runs before it on the raw text: a filter on the shingle array
+    #   itself would be pushed below the repartition and run the builder
+    #   serially.
+    # - AFTER: each shingle string is hashed inside the builder's array,
+    #   so the hash(doc_id) Exchange carries ONE (doc_id, hash set) row
+    #   per document; it is REUSED by all consumers (signature pass and
+    #   verification sets), so the builder still runs exactly once — do
     #   NOT replace with checkpoint/persist (measured slower).
-    ex = (
-        dc.repartition(fanout(spark))
-        .select("doc_id", F.explode(_shingles()).alias("sh"))
-        .repartition(fanout(spark), "doc_id")
-    )
-    return _minhash_pairs_from_ex(ex)
-
-
-def _minhash_pairs_from_ex(ex: DataFrame) -> DataFrame:
-    """Banded-MinHash candidate generation + exact-Jaccard verify over a
-    prebuilt exploded ``(doc_id, sh)`` table (hash(doc_id)-partitioned or
-    cached).  Split out so ``dedup_minhash_recall`` can feed ONE shared
-    sliced shingle build to both its truth kernel and this candidate
-    path instead of scanning + shingling the corpus twice."""
-    # hash the shingle STRING once; the K hash functions are int mixes of
-    # that base hash — ~64x less string hashing for identical LSH quality.
-    # ROW form (explode the K mixes, ONE narrow min-agg) rather than K
-    # min-agg columns: the 64-buffer HashAggregate generated ~8.7s of JIT
-    # compilation per cold run (measured); this shape compiles in ms and
-    # the cell count through the aggregate is identical.  No extra
-    # Exchange anywhere: hash(doc_id) partitioning from `ex` satisfies
-    # both the (doc_id, i) and (doc_id, band) groupings.
-    hashed = ex.select("doc_id", F.xxhash64("sh").alias("hs")).select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(_MH_K - 1)),
-                lambda i: F.xxhash64(i, F.col("hs")),
-            )
-        ).alias("i", "h"),
-    )
-    mins = hashed.groupBy("doc_id", "i").agg(F.min("h").alias("mh"))
-    srt = F.array_sort(F.collect_list(F.struct("i", "mh")))
-    banded = (
-        mins.withColumn("band", (F.col("i") / _MH_R).cast("int"))
-        .groupBy("doc_id", "band")
-        .agg(srt.alias("s"))
+    sets = (
+        dc.where(F.size(F.split("text", " ")) >= 3)
+        .repartition(fanout(spark))
         .select(
             "doc_id",
-            "band",
-            # same 4-column xxhash as the wide form → identical signatures
-            F.xxhash64(*[F.col("s")[r]["mh"] for r in range(_MH_R)]).alias("sig"),
+            F.array_distinct(F.transform(_shingles(), lambda sh: F.xxhash64(sh))).alias("hs"),
         )
+        .repartition(fanout(spark), "doc_id")
     )
+    return _minhash_pairs(sets)
+
+
+def _minhash_pairs(sets: DataFrame) -> DataFrame:
+    """Banded-MinHash candidate generation + exact-Jaccard verify over a
+    prebuilt ``(doc_id, hs)`` table of per-document shingle-hash sets
+    (non-empty ``array<long>``).  Split out so ``dedup_minhash_recall``
+    can feed ONE shared sliced shingle build to both its truth kernel and
+    this candidate path instead of scanning + shingling the corpus twice."""
+    # The explicit not-null filter is the one Catalyst infers for the
+    # verify joins but cannot push below the Python pass: stated here, it
+    # lands on the scan in every branch, so their Exchanges are identical
+    # and AQE runs one of them for all consumers.
+    sets = sets.where(F.col("doc_id").isNotNull())
+    banded = sets.mapInArrow(_minhash_bands, "doc_id long, band int, sig long")
+    # candidates = doc pairs sharing a (band, sig) bucket: one grouping of
+    # the signature rows (a self-join would run the Python pass per side)
     cand = (
-        banded.alias("a")
-        .join(
-            banded.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        banded.groupBy("band", "sig")
+        .agg(F.collect_list("doc_id").alias("ds"))
+        .where(F.size("ds") > 1)
+        .select(F.explode("ds").alias("doc_a"), "ds")
+        .select("doc_a", F.explode("ds").alias("doc_b"))
+        .where(F.col("doc_a") < F.col("doc_b"))
         .distinct()
     )
-    sets = ex.groupBy("doc_id").agg(F.collect_set("sh").alias("shs"))
-    sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("shs").alias("shs_a"))
-    sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("shs").alias("shs_b"))
-    inter = F.size(F.array_intersect("shs_a", "shs_b"))
-    union = F.size("shs_a") + F.size("shs_b") - inter
+    sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("hs_a"))
+    sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("hs_b"))
+    inter = F.size(F.array_intersect("hs_a", "hs_b"))
+    union = F.size("hs_a") + F.size("hs_b") - inter
     jac = inter / union
     return (
         cand.join(sa, "doc_a")
@@ -343,8 +414,7 @@ def dedup_embedding(
     count() that sizes it is a parquet-metadata-only job."""
     import math
 
-    import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     em = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     n_full = None
@@ -362,7 +432,7 @@ def dedup_embedding(
     # SEPARATE load for the index side: when both cogroup children share one
     # base plan, DeduplicateRelations re-ids the right side's columns but the
     # cogroup function keeps the left-side exprIds, and the mismatched
-    # attributes get pruned — the right pandas frame then arrives with only
+    # attributes get pruned — the right Arrow table then arrives with only
     # its grouping keys (KeyError in the kernel).  A fresh scan gives the
     # right side its own attribute ids.
     em_i = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -375,25 +445,21 @@ def dedup_embedding(
         "qpart", F.explode(F.sequence(F.lit(0), F.lit(P - 1)))
     )
 
-    def pairs_block(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty or right.empty:
-            return pd.DataFrame({"vec_a": [], "vec_b": [], "cos": []})
-        q_ids = left["vec_id"].to_numpy()
-        Q = np.stack(left["embedding"].to_numpy()).astype(np.float64)
-        Q /= np.linalg.norm(Q, axis=1, keepdims=True)
-        b_ids = right["vec_id"].to_numpy()
-        M = np.stack(right["embedding"].to_numpy()).astype(np.float64)
-        M /= np.linalg.norm(M, axis=1, keepdims=True)
-        C = Q @ M.T
+    out = pa.schema([("vec_a", pa.int64()), ("vec_b", pa.int64()), ("cos", pa.float64())])
+
+    def pairs_block(left: pa.Table, right: pa.Table) -> pa.Table:
+        if left.num_rows == 0 or right.num_rows == 0:
+            return out.empty_table()
+        q_ids = left.column("vec_id").to_numpy()
+        b_ids = right.column("vec_id").to_numpy()
+        C = _unit_rows(left.column("embedding")) @ _unit_rows(right.column("embedding")).T
         i, j = np.nonzero((C >= 0.4) & np.less.outer(q_ids, b_ids))
-        return pd.DataFrame(
-            {"vec_a": q_ids[i], "vec_b": b_ids[j], "cos": C[i, j]}
-        )
+        return pa.table({"vec_a": q_ids[i], "vec_b": b_ids[j], "cos": C[i, j]}, schema=out)
 
     return (
         q.groupBy("qpart", "block")
         .cogroup(idx.groupBy("qpart", "block"))
-        .applyInPandas(pairs_block, schema="vec_a long, vec_b long, cos double")
+        .applyInArrow(pairs_block, schema="vec_a long, vec_b long, cos double")
         .select("vec_a", "vec_b", F.round("cos", 6).alias("cosine"))
     )
 
@@ -482,7 +548,7 @@ def dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Shared sliced shingle build — the single most expensive projection
     # in either half; persist it round-robin-partitioned and let each
     # consumer add its own Exchange (sh for the truth join, doc_id for
-    # the signature aggs) on top of the cache.
+    # the shingle-hash sets) on top of the cache.
     ex_base = (
         dc.repartition(fanout(spark))
         .select("doc_id", F.explode(_shingles()).alias("sh"))
@@ -516,9 +582,9 @@ def dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # EXACTLY the production candidate set restricted to slice×slice
     # pairs — the semi-join below can never use an out-of-slice
     # candidate anyway.
-    cand = _minhash_pairs_from_ex(ex_base.repartition(fanout(spark), "doc_id")).select(
-        "doc_a", "doc_b"
-    )
+    cand = _minhash_pairs(
+        ex_base.groupBy("doc_id").agg(F.collect_set(F.xxhash64("sh")).alias("hs"))
+    ).select("doc_a", "doc_b")
     hits = truth.join(cand, ["doc_a", "doc_b"], "left_semi").agg(
         F.count(F.lit(1)).cast("long").alias("hits")
     )

@@ -1,16 +1,20 @@
 """Similarity search (SURVEY.md §2.10 X3).
 
 Brute-force cosine top-k as the exact baseline, LSH-bucketed ANN as the
-scale path.  All vector math stays in JVM-side array expressions
-(``zip_with`` + ``aggregate`` fold) — no Python in the pair loop.
+scale path.  The pair math runs where it is dense: each exact kernel and
+each ANN bucket verify is one BLAS block per cogroup cell or bucket, in
+Arrow Python stages (``mapInArrow`` / ``applyInArrow``) that read the
+float32 embeddings as numpy views over the Arrow buffers
+(``_unit_rows``).  The pure-expression variants (``sim_topk_cosine_expr``,
+``sim_label_knn``, ``sim_matryoshka_prefix``) keep the math in JVM-side
+array expressions (``zip_with`` + ``aggregate`` fold).
 
 Scale notes (100 TB of vectors): the brute-force pair join is O(n²) and
 exists as the correctness baseline + re-ranker.  The ANN path buckets by
-random hyperplane projections (``BucketedRandomProjectionLSH`` over
-L2-normalized vectors, where euclidean distance is monotone in cosine:
-d² = 2 - 2cos) so candidate generation is an equi-join on bucket ids —
-the same banding trick as MinHash.  An IVF variant is the same shape with
-learned centroids as buckets.
+random hyperplane projections of the L2-normalized vectors (the sign of a
+projection is the cosine-LSH bit) so candidate generation is an
+equi-group on bucket ids — the same banding trick as MinHash.  An IVF
+variant is the same shape with learned centroids as buckets.
 """
 
 from __future__ import annotations
@@ -36,6 +40,20 @@ def with_norm(em: DataFrame) -> DataFrame:
     return em.select(
         "vec_id", "embedding", F.sqrt(dot(F.col("embedding"), F.col("embedding"))).alias("nrm")
     )
+
+
+def _unit_rows(col):
+    """float64 unit rows of an Arrow ``list<float>`` column of one
+    dimension: one numpy view over the values buffer (sliced by the list
+    offsets), widened and row-normalized — no per-row Python objects."""
+    import numpy as np
+
+    if hasattr(col, "combine_chunks"):  # a Table column
+        col = col.combine_chunks()
+    off = col.offsets.to_numpy()
+    X = col.values.to_numpy()[off[0] : off[-1]].astype(np.float64).reshape(len(col), -1)
+    X /= np.linalg.norm(X, axis=1, keepdims=True)
+    return X
 
 
 @register(
@@ -67,9 +85,9 @@ def sim_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     block-partitioned matrix product — the fully distributed brute-force
     kNN.  The index is split into B blocks (``vec_id % B``) and replicated
     to P query partitions; queries are exploded across the B blocks; each
-    (qpart, block) cell is one ``cogroup().applyInPandas`` task doing a
-    single BLAS matmul + per-query top-5; a final window merges the
-    per-block candidates (exact: every true global top-5 neighbor is in
+    (qpart, block) cell is one ``cogroup().applyInArrow`` task doing a
+    single BLAS matmul + every query's top-5 in one row-wise lexsort; a
+    final window merges the per-block candidates (exact: every true global top-5 neighbor is in
     its own block's top-5).
 
     Nothing touches the driver: both replications ride the cogroup
@@ -78,7 +96,7 @@ def sim_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors) fits one executor; the exact all-pairs communication is
     inherent to brute force, the ANN path (sim_ann_lsh) is the sub-linear
     alternative.  Ties at the top-5 boundary are broken (cos desc,
-    nbr_id asc) by a FULL lexsort per block and again by the merge
+    nbr_id asc) by a FULL lexsort per query row and again by the merge
     window, so equal-cosine candidates can't be dropped arbitrarily, and
     corpora with <6 vectors emit however many neighbors exist.
 
@@ -90,7 +108,7 @@ def sim_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     em = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # r13 (guide §5): grid sizing from parquet footers — same integer as
@@ -109,31 +127,32 @@ def sim_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         "qpart", F.explode(F.sequence(F.lit(0), F.lit(P - 1)))
     )
 
-    def topk_block(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"vec_id": [], "nbr_id": [], "cos": []})
-        if left.empty or right.empty:
-            return empty
-        q_ids = left["vec_id"].to_numpy()
-        Q = np.stack(left["embedding"].to_numpy()).astype(np.float64)
-        Q /= np.linalg.norm(Q, axis=1, keepdims=True)
-        b_ids = right["vec_id"].to_numpy()
-        M = np.stack(right["embedding"].to_numpy()).astype(np.float64)
-        M /= np.linalg.norm(M, axis=1, keepdims=True)
-        C = Q @ M.T
+    out = pa.schema([("vec_id", pa.int64()), ("nbr_id", pa.int64()), ("cos", pa.float64())])
+
+    def topk_block(left: pa.Table, right: pa.Table) -> pa.Table:
+        if left.num_rows == 0 or right.num_rows == 0:
+            return out.empty_table()
+        q_ids = left.column("vec_id").to_numpy()
+        b_ids = right.column("vec_id").to_numpy()
+        C = _unit_rows(left.column("embedding")) @ _unit_rows(right.column("embedding")).T
         C[np.equal.outer(q_ids, b_ids)] = -np.inf  # exclude self
-        out_v, out_n, out_c = [], [], []
-        for i in range(len(q_ids)):
-            order = np.lexsort((b_ids, -C[i]))[:5]
-            order = order[C[i][order] != -np.inf]
-            out_v.extend([q_ids[i]] * len(order))
-            out_n.extend(b_ids[order])
-            out_c.extend(C[i][order])
-        return pd.DataFrame({"vec_id": out_v, "nbr_id": out_n, "cos": out_c})
+        # every query's (cos desc, nbr_id asc) order in one lexsort
+        order = np.lexsort((np.broadcast_to(b_ids, C.shape), -C), axis=1)[:, :5]
+        top = np.take_along_axis(C, order, axis=1)
+        keep = top != -np.inf
+        return pa.table(
+            {
+                "vec_id": np.broadcast_to(q_ids[:, None], order.shape)[keep],
+                "nbr_id": b_ids[order][keep],
+                "cos": top[keep],
+            },
+            schema=out,
+        )
 
     cand = (
         q.groupBy("qpart", "block")
         .cogroup(idx.groupBy("qpart", "block"))
-        .applyInPandas(topk_block, schema="vec_id long, nbr_id long, cos double")
+        .applyInArrow(topk_block, schema="vec_id long, nbr_id long, cos double")
     )
     w = Window.partitionBy("vec_id").orderBy(F.desc("cos"), F.asc("nbr_id"))
     return (
@@ -193,71 +212,76 @@ _LSH_R, _LSH_H = 4, 14  # sign bits per table × hash tables
 _LSH_SEED = 42
 
 
-def _lsh_bucket_batches(it):
-    """One Arrow pass: H·R random-hyperplane projections as ONE BLAS
-    matmul per batch → R sign bits per table packed to a bucket id; emits
-    (vec_id, table, bucket, unit-vector).  The planes are regenerated from
-    the fixed seed in every task — model metadata, like IVF's centroid
-    literals, never shipped as data."""
+def _lsh_bucket_batches(batches):
+    """One Arrow pass: H·R random-hyperplane projections of the unit rows
+    as ONE BLAS matmul per batch → R sign bits per table packed to a
+    bucket id; emits (vec_id, table, bucket, embedding), the raw float32
+    embedding taken H times (``bucket_pairs`` normalizes its own rows).
+    The planes are regenerated from the fixed seed in every task — model
+    metadata, like IVF's centroid literals, never shipped as data."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     rng = np.random.default_rng(_LSH_SEED)
     planes = None
     shifts = 1 << np.arange(_LSH_R)
-    for pdf in it:
-        if pdf.empty:
+    tables = np.arange(_LSH_H, dtype=np.int32)
+    for batch in batches:
+        n = batch.num_rows
+        if n == 0:
             continue
-        X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-        X /= np.linalg.norm(X, axis=1, keepdims=True)
+        emb = batch.column("embedding")
+        X = _unit_rows(emb)
         if planes is None:
             planes = rng.standard_normal((_LSH_H * _LSH_R, X.shape[1]))
         bits = (X @ planes.T) > 0
-        buckets = (bits.reshape(len(pdf), _LSH_H, _LSH_R) * shifts).sum(axis=2)
-        n = len(pdf)
-        yield pd.DataFrame(
-            {
-                "vec_id": np.repeat(pdf["vec_id"].to_numpy(), _LSH_H),
-                "table": np.tile(np.arange(_LSH_H, dtype=np.int32), n),
-                "bucket": buckets.reshape(-1).astype(np.int32),
-                "uv": [row for row in X for _ in range(_LSH_H)],
-            }
+        buckets = (bits.reshape(n, _LSH_H, _LSH_R) * shifts).sum(axis=2)
+        rows = np.repeat(np.arange(n), _LSH_H)
+        yield pa.RecordBatch.from_arrays(
+            [
+                batch.column("vec_id").take(rows),
+                pa.array(np.tile(tables, n)),
+                pa.array(buckets.reshape(-1).astype(np.int32)),
+                emb.take(rows),
+            ],
+            names=["vec_id", "table", "bucket", "embedding"],
         )
 
 
-def bucket_pairs(pdf):
+def bucket_pairs(tbl):
     """Exact-cosine verify of one ANN bucket (``sim_ann_lsh``'s (table,
-    bucket) cells, ``sim_ann_ivf``'s probe buckets): unit vectors ``uv``
-    in, every (vec_a < vec_b) pair with cos ≥ 0.4 out, as one dense BLAS
-    block per chunk."""
+    bucket) cells, ``sim_ann_ivf``'s probe buckets), an ``applyInArrow``
+    kernel: ``(vec_id, embedding)`` rows in, every (vec_a < vec_b) pair
+    with cos ≥ 0.4 out, as one dense BLAS block per chunk."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    if len(pdf) < 2:
-        return pd.DataFrame({"vec_a": [], "vec_b": [], "cos": []})
-    pdf = pdf.sort_values("vec_id")
-    ids = pdf["vec_id"].to_numpy()
-    M = np.stack(pdf["uv"].to_numpy())
-    # CHUNKED verify (r9): a hot bucket on a big corpus made the full
-    # n×n product multi-GB per task and the worker OOM'd at the 100×
-    # fixture (kernel-killed, 10.7 GB RSS).  Chunk the query rows so
-    # the dense block stays ~64 MB; each output cell is an
-    # independent dot product, so results are bit-identical.
-    step = max(1, (8 << 20) // max(1, len(ids)))
     out_a, out_b, out_c = [], [], []
-    for s in range(0, len(ids), step):
-        C = M[s : s + step] @ M.T
-        i, j = np.nonzero(C >= 0.4)
-        keep = j > (i + s)  # ids sorted → global row < col ⇔ vec_a < vec_b
-        out_a.append(ids[i[keep] + s])
-        out_b.append(ids[j[keep]])
-        out_c.append(C[i[keep], j[keep]])
-    return pd.DataFrame(
+    if tbl.num_rows >= 2:
+        ids = tbl.column("vec_id").to_numpy()
+        order = np.argsort(ids)
+        ids = ids[order]
+        M = _unit_rows(tbl.column("embedding"))[order]
+        # CHUNKED verify (r9): a hot bucket on a big corpus made the full
+        # n×n product multi-GB per task and the worker OOM'd at the 100×
+        # fixture (kernel-killed, 10.7 GB RSS).  Chunk the query rows so
+        # the dense block stays ~64 MB; each output cell is an
+        # independent dot product, so results are bit-identical.
+        step = max(1, (8 << 20) // len(ids))
+        for s in range(0, len(ids), step):
+            C = M[s : s + step] @ M.T
+            i, j = np.nonzero(C >= 0.4)
+            keep = j > (i + s)  # ids sorted → global row < col ⇔ vec_a < vec_b
+            out_a.append(ids[i[keep] + s])
+            out_b.append(ids[j[keep]])
+            out_c.append(C[i[keep], j[keep]])
+    return pa.table(
         {
             "vec_a": np.concatenate(out_a) if out_a else [],
             "vec_b": np.concatenate(out_b) if out_b else [],
             "cos": np.concatenate(out_c) if out_c else [],
-        }
+        },
+        schema=pa.schema([("vec_a", pa.int64()), ("vec_b", pa.int64()), ("cos", pa.float64())]),
     )
 
 
@@ -273,7 +297,7 @@ def sim_ann_lsh(
 
     1. signature pass: H·R projections as one matmul per batch, R sign
        bits per table → bucket id (``_lsh_bucket_batches``);
-    2. per-(table, bucket) ``applyInPandas``: dense block matmul, exact
+    2. per-(table, bucket) ``applyInArrow``: dense block matmul, exact
        cos ≥ 0.4 filter, ``vec_a < vec_b`` inside the cell; a final
        (vec_a, vec_b) hash-agg dedups pairs sharing several tables.
 
@@ -301,12 +325,12 @@ def sim_ann_lsh(
         em = em.where(
             audit_gate("vec_id", table_rows(sf_dir, "embeddings"), audit_pct, _AUDIT_N0_VEC)
         )
-    sig = em.repartition(fanout(spark)).mapInPandas(
+    sig = em.repartition(fanout(spark)).mapInArrow(
         _lsh_bucket_batches,
-        schema="vec_id long, table int, bucket int, uv array<double>",
+        schema="vec_id long, table int, bucket int, embedding array<float>",
     )
 
-    cand = sig.groupBy("table", "bucket").applyInPandas(
+    cand = sig.groupBy("table", "bucket").applyInArrow(
         bucket_pairs, schema="vec_a long, vec_b long, cos double"
     )
     return (

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from ..io import load, table_rows
 from ..registry import register
-from .similarity import bucket_pairs, dot, with_norm
+from .similarity import bucket_pairs, with_norm
 
 _K = 16
 _NPROBE = 3
@@ -78,7 +78,7 @@ def sim_ann_ivf(
       centroids are model metadata; training them on the full corpus is
       wasted work that grows with the data.
     - Candidate verification is a per-bucket BLAS matmul
-      (``applyInPandas`` per bucket), not a per-pair Catalyst
+      (``applyInArrow`` per bucket), not a per-pair Catalyst
       ``aggregate`` fold: candidates within a bucket form a dense block,
       exactly the shape BLAS eats (the fold form measured 200+ s at 20k
       vectors).  Pairs sharing several probe buckets are deduped by a
@@ -103,6 +103,7 @@ def sim_ann_ivf(
         )
     unit = n.select(
         "vec_id",
+        "embedding",
         F.transform("embedding", lambda x: x.cast("double") / F.col("nrm")).alias("uv"),
     ).persist()
     # Two consumers share `unit`: the k-means fit (Spark 4 ML re-executes
@@ -136,9 +137,9 @@ def sim_ann_ivf(
 
     dots = _dots_to_centers(F.col("uv"), centers)
     b = _top_buckets(dots, _NPROBE)
-    both = unit.select("vec_id", "uv", F.explode(F.array(*b)).alias("bucket"))
+    both = unit.select("vec_id", "embedding", F.explode(F.array(*b)).alias("bucket"))
 
-    cand = both.groupBy("bucket").applyInPandas(
+    cand = both.groupBy("bucket").applyInArrow(
         bucket_pairs, schema="vec_a long, vec_b long, cos double"
     )
     return (

@@ -62,3 +62,22 @@ def test_reader_refuses_deflate_strips():
     struct.pack_into("<HHIHH", payload, entry, 259, 3, 1, 8, 0)
     with pytest.raises(NotImplementedError, match="Deflate"):
         _decode_tiff(bytes(payload))
+
+
+@pytest.mark.parametrize(
+    "grid, shape",
+    [("_STRIPED", (1, 5)), ("_TILED", (16, 16)), ("_TILED", (20, 40))],
+    ids=["striped_1x5", "tiled_16x16", "tiled_20x40"],
+)
+def test_single_block_and_edge_tile_rasters_round_trip(grid, shape):
+    """A raster of ONE block writes its offset and byte count inline (the
+    reader reads values of <= 4 bytes there), and a tiled raster whose
+    sides are not tile multiples writes full, padded edge tiles."""
+    from odc_product_docker_images_spark.multimodal import geotiff
+
+    g = getattr(geotiff, grid)
+    raster = np.random.default_rng(3).integers(0, 65536, size=shape, dtype=np.uint16)
+    w, h, back, scale, tiepoint, _ = geotiff._decode_tiff(g.pack(raster))
+    assert (h, w) == shape
+    np.testing.assert_array_equal(back, raster)
+    assert (scale, tiepoint) == (g.scale, g.tiepoint)

@@ -159,8 +159,33 @@ def test_sim_topk_is_cogrouped_not_driver_built(spark):
     from odc_product_docker_images_spark.textvec.similarity import sim_topk_cosine
 
     plan = C.formatted_plan(sim_topk_cosine(spark, SF))
-    assert "FlatMapCoGroupsInPandas" in plan  # the block matmul runs on executors
+    assert "FlatMapCoGroupsInArrow" in plan  # the block matmul runs on executors
+    assert "FlatMapCoGroupsInPandas" not in plan
     assert "BatchEvalPython" not in plan
+
+
+def test_sim_ann_lsh_stages_are_arrow(spark):
+    """The signature pass and the per-bucket verify are Arrow stages:
+    numpy views over the Arrow buffers, no pandas frame on either side."""
+    from odc_product_docker_images_spark.textvec.similarity import sim_ann_lsh
+
+    plan = C.formatted_plan(sim_ann_lsh(spark, SF))
+    assert "MapInArrow" in plan and "FlatMapGroupsInArrow" in plan
+    assert "InPandas" not in plan
+    assert "BatchEvalPython" not in plan
+
+
+def test_dedup_minhash_is_one_arrow_signature_pass(spark):
+    """The 64 minima and 16 band signatures come from ONE MapInArrow pass
+    over per-document shingle-hash sets: no K-way posexplode of the
+    shingle rows, and the signature rows have a single consumer."""
+    from odc_product_docker_images_spark.textvec.dedup import dedup_minhash
+
+    plan = C.formatted_plan(dedup_minhash(spark, SF))
+    physical = plan.split("\n\n")[0]  # the operator tree, one line per node
+    assert physical.count("MapInArrow") == 1
+    assert "posexplode" not in plan
+    assert "InPandas" not in plan
 
 
 def test_filter_pipeline_single_scan(spark):

@@ -27,6 +27,97 @@ def test_minhash_recall_vs_exact_jaccard(spark, sf_dir):
     assert not missed, f"LSH missed high-similarity pairs: {missed}"
 
 
+def test_xxh64_port_matches_spark_xxhash64(spark):
+    """The numpy XXH64 port behind the MinHash signature pass equals
+    Spark's ``xxhash64`` on (int, long) — the K hash functions — and on
+    four longs — the band signatures — at the edges and at random."""
+    from pyspark.sql import functions as F
+
+    from odc_product_docker_images_spark.textvec.dedup import (
+        _XXH_SEED,
+        _xxh64_int,
+        _xxh64_long,
+    )
+
+    rng = np.random.default_rng(5)
+    lmin, lmax, imin, imax = -(2**63), 2**63 - 1, -(2**31), 2**31 - 1
+    longs = np.array(
+        [0, 1, -1, lmin, lmax, *rng.integers(lmin, lmax, 27, dtype=np.int64)], np.int64
+    )
+    ints = np.array(
+        [0, 1, -1, imin, imax, *rng.integers(imin, imax, 27, dtype=np.int32)], np.int32
+    )
+    cols = [longs, longs[::-1], np.roll(longs, 7), np.roll(longs, 13)]
+    df = spark.createDataFrame(
+        [tuple(int(c[k]) for c in (ints, *cols)) for k in range(len(longs))],
+        "i int, a long, b long, c long, d long",
+    )
+    got = df.select(
+        F.xxhash64("i", "a").alias("k"), F.xxhash64("a", "b", "c", "d").alias("band")
+    ).collect()
+    band = _XXH_SEED
+    for c in cols:
+        band = _xxh64_long(c, band)
+    assert [r.k for r in got] == _xxh64_long(longs, _xxh64_int(ints, _XXH_SEED)).view(
+        np.int64
+    ).tolist()
+    assert [r.band for r in got] == band.view(np.int64).tolist()
+
+
+def test_minhash_arrow_bands_equal_row_form(spark, sf_dir):
+    """The Arrow signature pass returns exactly the band signatures of the
+    Catalyst row form it replaced: K rows per shingle of xxhash64(i, hs),
+    a (doc_id, i) min-aggregate, and xxhash64 over each band's R minima
+    in i order."""
+    from pyspark.sql import functions as F
+
+    from odc_product_docker_images_spark.io import load
+    from odc_product_docker_images_spark.textvec.dedup import (
+        _MH_K,
+        _MH_R,
+        _minhash_bands,
+    )
+    from odc_product_docker_images_spark.textvec.shingle import _shingles
+
+    hs = (
+        load(spark, sf_dir, "documents")
+        .select("doc_id", F.explode(_shingles()).alias("sh"))
+        .select("doc_id", F.xxhash64("sh").alias("hs"))
+    )
+    mins = (
+        hs.select(
+            "doc_id",
+            F.posexplode(
+                F.transform(
+                    F.sequence(F.lit(0), F.lit(_MH_K - 1)),
+                    lambda i: F.xxhash64(i, F.col("hs")),
+                )
+            ).alias("i", "h"),
+        )
+        .groupBy("doc_id", "i")
+        .agg(F.min("h").alias("mh"))
+    )
+    srt = F.array_sort(F.collect_list(F.struct("i", "mh")))
+    row_form = (
+        mins.withColumn("band", (F.col("i") / _MH_R).cast("int"))
+        .groupBy("doc_id", "band")
+        .agg(srt.alias("s"))
+        .select(
+            "doc_id",
+            "band",
+            F.xxhash64(*[F.col("s")[r]["mh"] for r in range(_MH_R)]).alias("sig"),
+        )
+    )
+    arrow = (
+        hs.groupBy("doc_id")
+        .agg(F.collect_set("hs").alias("hs"))
+        .mapInArrow(_minhash_bands, "doc_id long, band int, sig long")
+    )
+    want = sorted(tuple(r) for r in row_form.collect())
+    assert want, "fixture should have shingled documents"
+    assert sorted(tuple(r) for r in arrow.collect()) == want
+
+
 def test_ann_lsh_recall_vs_brute_force(spark, sf_dir):
     from odc_product_docker_images_spark.textvec.dedup import dedup_embedding
     from odc_product_docker_images_spark.textvec.similarity import sim_ann_lsh

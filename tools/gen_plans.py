@@ -115,12 +115,16 @@ def main() -> None:
         py = []
         if "MapInPandas" in plan:
             py.append("MapInPandas")
+        if "MapInArrow" in plan:
+            py.append("MapInArrow")
         if "FlatMapGroupsInPandas" in plan:
             py.append("applyInPandas")
         if "FlatMapGroupsInArrow" in plan:
             py.append("applyInArrow")
         if "FlatMapCoGroupsInPandas" in plan:
             py.append("cogroup")
+        if "FlatMapCoGroupsInArrow" in plan:
+            py.append("cogroupInArrow")
         if "ArrowEvalPythonUDTF" in plan:
             py.append("ArrowUDTF")
         if "ArrowEvalPython " in plan:  # the UDF node prints with no UDTF suffix

@@ -156,6 +156,34 @@ def test_ann_ivf_recall_and_precision(spark, sf_dir):
     assert (abs(merged["cosine"] - merged["est_cosine"]) < 1e-4).all()
 
 
+def test_ann_ivf_is_deterministic_above_the_fit_cap(spark, tmp_path):
+    """Above ``_FIT_CAP`` vectors the k-means fit sees a share of them:
+    two builds must fit on the same rows in the same order and return the
+    same pairs (a ``sample()`` of the persisted frame drew a different
+    share each run)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from odc_product_docker_images_spark.textvec.similarity_ivf import _FIT_CAP, sim_ann_ivf
+
+    n = _FIT_CAP + 904
+    emb = np.random.default_rng(904).normal(0.0, 0.15, (n, 64)).astype(np.float32)
+    table = pa.table({
+        "vec_id": pa.array(np.arange(n, dtype=np.int64)),
+        "embedding": pa.array(list(emb), type=pa.list_(pa.field("element", pa.float32()))),
+        "label": pa.array(np.zeros(n, dtype=np.int32)),
+    })
+    out = tmp_path / "embeddings.parquet"
+    out.mkdir()
+    # two files, as the generated inputs have
+    for i, part in enumerate((table.slice(0, n // 2), table.slice(n // 2))):
+        pq.write_table(part, out / f"part-{i:05d}.parquet")
+    first, second = (
+        frozenset(map(tuple, sim_ann_ivf(spark, str(tmp_path)).collect())) for _ in range(2)
+    )
+    assert first and first == second
+
+
 def test_simhash_is_deterministic_and_locality_sensitive(spark, sf_dir):
     from odc_product_docker_images_spark.textvec.dedup import dedup_simhash
 

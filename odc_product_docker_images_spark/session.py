@@ -36,6 +36,19 @@ testing but every knob is the one you would tune on a 1000-executor cluster:
   call site, most of the cost of building a query's DataFrame.  Errors
   lose that Python call site; the engine's key/phase job tags (ROADMAP
   item 2) are what should name them.
+- Generated-code cache of 2000 classes (``spark.sql.codegen.cache.maxEntries``,
+  a static conf; Spark's default is 100).  Spark reuses a compiled class
+  only while its Java source is in this LRU cache.  One ``llm_curation``
+  benchmark pass generates ~170 classes, so at 100 entries (fewer in
+  effect: Guava's cache is segmented and evicts per segment) a warm pass
+  missed almost every lookup and Janino recompiled ~158 classes;
+  each recompiled class is also a new class for the JIT.  At 2000 the
+  benchmark's sessions keep every class and a warm pass compiles a few.
+  Tier-1's suite (every key in one session) generates more than any
+  bounded cache should hold: 12,552 compiles at 100 entries, 7,928 at
+  2000, which held 54-107 MB more heap (two runs) and ~13 MB more
+  metaspace at its end (~35-65 KB a class); a larger cache would buy the
+  suite fewer compiles at that price.  ``prep`` cannot set it.
 - Sized from the host when ``SPARK_GRAFT_CPUS`` / ``SPARK_DRIVER_MEM`` are
   unset: the cores this process may run on, and a heap of at most half
   the machine's memory.
@@ -178,6 +191,9 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _host_heap())
         .config(_DEBUGGING, "false")
+        # static: sized to hold a long session's generated classes (see
+        # the module docstring); a caller's extra_conf still wins
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         # workers fork from a daemon that stops every task re-reading the
         # zips on the worker path (see pyworker.py); the package's parent
         # on the worker path makes it, and the kernels pickled by
@@ -223,7 +239,10 @@ def prep(spark: SparkSession) -> SparkSession:
 
     The driver hands us an externally-built session for ``queries()`` /
     ``entry()``; these are the confs that matter for oracle parity and can
-    be set post-launch (unlike driver memory).
+    be set post-launch (unlike driver memory).  Nor can it size the
+    generated-code cache (``spark.sql.codegen.cache.maxEntries`` is static,
+    CANNOT_MODIFY_STATIC_CONFIG): a session built elsewhere keeps Spark's
+    100 entries and recompiles most of a repeated plan's classes.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # DataFrame debugging off (see get_spark).  Its conf is static, so on

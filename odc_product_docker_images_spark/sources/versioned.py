@@ -8,9 +8,15 @@ the reference's plain file trees lack and a 100 TB lakehouse needs:
   manifest ``_manifest/v{N}.json`` listing the EXACT data files of that
   snapshot; readers plan from a manifest, never from directory listing, so
   a concurrent writer can't tear a read and old versions stay readable.
-- **Atomic commit**: the manifest is written to a temp name and renamed —
-  readers see v(N) or v(N+1), nothing in between (single-FS rename
-  atomicity; object stores use put-if-absent for the same effect).
+- **Atomic commit, safe under concurrent writers**: the manifest is
+  written to a temp name and published as ``v{read+1}.json`` with a
+  put-if-absent hard link, where ``read`` is the version the operation
+  read (Delta's optimistic concurrency; object stores offer the same
+  put-if-absent).  Readers see v(N) or v(N+1), nothing in between, and of
+  two writers that read v(N) exactly one publishes v(N+1): the other gets
+  :class:`CommitConflict` instead of silently replacing it.  A blind
+  append retries on the new head; merge, compaction, restore and
+  overwrite raise.
 - **Compaction without breaking history**: small files are rewritten into
   few large ones as a NEW snapshot whose manifest drops the old files;
   previous manifests still reference them, so time travel survives until
@@ -39,6 +45,14 @@ from ..functions.det import dsum, sql_dsum
 from ..io import load
 from ..registry import register
 from ..scratch import fresh
+
+
+class CommitConflict(RuntimeError):
+    """Another writer published the version this commit was to publish."""
+
+    def __init__(self, path: Path, version: int) -> None:
+        super().__init__(f"{path}: version {version} was committed concurrently")
+        self.path, self.version = path, version
 
 
 class VersionedTable:
@@ -149,26 +163,34 @@ class VersionedTable:
             if statted.get(name, 0) == md.num_row_groups
         }
 
-    def _commit(self, files: list[str], operation: str, schema: str | None) -> int:
-        """Atomically publish a new snapshot listing ``files`` (relative);
-        ``schema`` is the StructType JSON string every one of them was
-        written with (Delta's ``schemaString``), or None when they differ
-        or it is unknown."""
+    def _commit(
+        self, files: list[str], operation: str, schema: str | None, read: int | None
+    ) -> int:
+        """Atomically publish the snapshot after version ``read`` (the one
+        the operation read; None for a new table) listing ``files``
+        (relative); ``schema`` is the StructType JSON string every one of
+        them was written with (Delta's ``schemaString``), or None when
+        they differ or it is unknown.  Raises :class:`CommitConflict`
+        when another writer published that version first."""
         self.manifest_dir.mkdir(parents=True, exist_ok=True)
-        new_v = (self.latest_version() or 0) + 1 if self.versions() else 0
+        new_v = 0 if read is None else read + 1
         manifest = {"version": new_v, "operation": operation, "files": sorted(files)}
         if schema is not None:
             manifest["schema"] = schema
         if self.stat_cols:
-            prev_stats = {}
-            if self.versions():
-                prev_stats = self._manifest(self.latest_version()).get("stats", {})
+            prev_stats = {} if read is None else self._manifest(read).get("stats", {})
             manifest["stats"] = {
                 f: prev_stats.get(f) or self._file_stats(f) for f in files
             }
         tmp = self.manifest_dir / f".v{new_v}.json.{uuid.uuid4().hex[:8]}"
         tmp.write_text(json.dumps(manifest, indent=1))
-        os.rename(tmp, self.manifest_dir / f"v{new_v}.json")  # the commit point
+        try:
+            # the commit point: a link, unlike a rename, never replaces
+            os.link(tmp, self.manifest_dir / f"v{new_v}.json")
+        except FileExistsError:
+            raise CommitConflict(self.path, new_v) from None
+        finally:
+            tmp.unlink()
         return new_v
 
     # -- write paths -------------------------------------------------------
@@ -224,15 +246,26 @@ class VersionedTable:
         return keep
 
     def write(self, df: DataFrame, mode: str = "append", n_files: int | None = None) -> int:
+        """Commit ``df``'s rows as new files.  An append that loses a
+        commit race re-reads the new head and commits again (its files
+        depend on no snapshot); an overwrite raises :class:`CommitConflict`."""
+        if mode not in ("append", "overwrite"):
+            raise ValueError(f"mode must be append|overwrite, got {mode!r}")
+        read = self.latest_version()
         new_files = self._write_data(df, n_files)
         schema = _file_schema(df)
-        if mode == "append" and self.latest_version() is not None:
-            prev = self._manifest(self.latest_version())
-            new_files = list(prev["files"]) + new_files
-            schema = _same_schema(prev, schema)
-        elif mode != "append" and mode != "overwrite":
-            raise ValueError(f"mode must be append|overwrite, got {mode!r}")
-        return self._commit(new_files, mode, schema)
+        if mode == "overwrite":
+            return self._commit(new_files, mode, schema, read)
+        while True:
+            files, head_schema = new_files, schema
+            if read is not None:
+                prev = self._manifest(read)
+                files = list(prev["files"]) + new_files
+                head_schema = _same_schema(prev, schema)
+            try:
+                return self._commit(files, mode, head_schema, read)
+            except CommitConflict:
+                read = self.latest_version()
 
     def clone_shallow(self, dest_path: str) -> "VersionedTable":
         """SHALLOW CLONE (Delta ``CREATE TABLE ... SHALLOW CLONE`` analog):
@@ -253,15 +286,16 @@ class VersionedTable:
             os.path.relpath(os.path.realpath(self.path / f), dest.path.resolve())
             for f in src["files"]
         ]
-        dest._commit(refs, "clone", src.get("schema"))
+        dest._commit(refs, "clone", src.get("schema"), dest.latest_version())
         return dest
 
     def compact(self, spark: SparkSession, n_files: int = 1) -> int:
         """Rewrite the LATEST snapshot into ``n_files`` files as a new
         version.  Old files stay on disk — older snapshots still plan them."""
-        df = self.read(spark)
+        read = self.latest_version()
+        df = self.read(spark, read)
         new_files = self._write_data(df, n_files)
-        return self._commit(new_files, "compact", _file_schema(df))
+        return self._commit(new_files, "compact", _file_schema(df), read)
 
     def merge(self, spark: SparkSession, updates: DataFrame, key: str) -> int:
         """MERGE (upsert) by ``key`` with file-level copy-on-write — the
@@ -305,7 +339,8 @@ class VersionedTable:
                 f"merge updates must be unique on {key!r}: "
                 f"{chk['n']} rows but {chk['nd']} distinct keys"
             )
-        prev_m = self._manifest(self.latest_version())
+        read = self.latest_version()
+        prev_m = self._manifest(read)
         prev = prev_m["files"]
         # File skipping on the merge key (r12, guide §6.2 / the Delta MERGE
         # mechanic): a file whose footer [min,max] on ``key`` misses the
@@ -382,7 +417,7 @@ class VersionedTable:
         schema = _file_schema(rewritten)
         if untouched:
             schema = _same_schema(prev_m, schema)
-        return self._commit(untouched + new_files, "merge", schema)
+        return self._commit(untouched + new_files, "merge", schema, read)
 
     def change_feed(
         self,
@@ -477,10 +512,11 @@ class VersionedTable:
         forensics until VACUUM retires them — and no data is copied: the
         restore manifest points at the original files, so the operation is
         O(manifest) regardless of table size."""
+        read = self.latest_version()
         if version not in self.versions():
             raise ValueError(f"version {version} does not exist")
         m = self._manifest(version)
-        return self._commit(m["files"], "restore", m.get("schema"))
+        return self._commit(m["files"], "restore", m.get("schema"), read)
 
     # -- read path ---------------------------------------------------------
 

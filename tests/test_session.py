@@ -1,6 +1,8 @@
-"""The driver JVM's class-data archive (``session._cds_launch`` /
-``_publish``): when a launch records or maps it, when it launches exactly
-as without it, and that a published archive is really mapped.
+"""The session ``get_spark`` builds: its generated-code cache holds a
+session's classes, and the driver JVM's class-data archive
+(``session._cds_launch`` / ``_publish``): when a launch records or maps
+it, when it launches exactly as without it, and that a published archive
+is really mapped.
 
 Only the last test records a full archive (in its own cache directory);
 the others never start a dump."""
@@ -34,6 +36,22 @@ def host(tmp_path, monkeypatch):
     monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
     monkeypatch.chdir(tmp_path)
     return home
+
+
+def test_codegen_cache_holds_a_sessions_classes(spark):
+    """150 distinct projections generate more classes than Spark's default
+    100-entry cache holds, so there a second round recompiles every
+    projection; here it compiles nothing."""
+    from pyspark.sql import functions as F
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    dfs = [spark.range(10).select((F.col("id") * i + i).alias("x")) for i in range(150)]
+    for df in dfs:
+        df.collect()
+    before = compiles.getCount()
+    for df in dfs:
+        df.collect()
+    assert compiles.getCount() - before == 0
 
 
 def _ended(*cmd: str) -> subprocess.Popen:
@@ -116,7 +134,8 @@ def _get_spark(tmp_path, env, extra_conf) -> subprocess.CompletedProcess:
         "args = list(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments())\n"
         "print(json.dumps({'rows': s.range(3).count(), 'args': args,\n"
         "    'classpath': jvm.System.getProperty('java.class.path'),\n"
-        "    'live': s.conf.get('spark.probe.live', None)}))\n"
+        "    'live': s.conf.get('spark.probe.live', None),\n"
+        "    'codegen_cache': s.conf.get('spark.sql.codegen.cache.maxEntries')}))\n"
     )
     env = {**os.environ, "SPARK_DRIVER_MEM": "1g", "SPARK_GRAFT_CPUS": "2",
            "XDG_CACHE_HOME": str(tmp_path / "cache"), **env}
@@ -138,10 +157,12 @@ def test_live_conf_dir_launches_as_without_cds(tmp_path):
     (home / "conf").mkdir()
     (home / "conf" / "spark-defaults.conf").write_text("spark.probe.live true\n")
     out = _get_spark(tmp_path, {"SPARK_HOME": str(home)},
-                     {"spark.driver.extraJavaOptions": "-Dprobe.caller=1"})
+                     {"spark.driver.extraJavaOptions": "-Dprobe.caller=1",
+                      "spark.sql.codegen.cache.maxEntries": "7"})
     assert out.returncode == 0, out.stderr[-2000:]
     got = json.loads(out.stdout.splitlines()[-1])
     assert got["rows"] == 3 and got["live"] == "true"
+    assert got["codegen_cache"] == "7"  # the caller's conf wins
     assert got["classpath"].startswith(f"{home}/conf/:")
     assert "-Dprobe.caller=1" in got["args"]
     assert not [a for a in got["args"] if "Archive" in a or "cds" in a]
@@ -158,6 +179,7 @@ def test_published_archive_is_mapped(tmp_path):
         first = _get_spark(tmp_path, {}, {})
         assert first.returncode == 0, first.stderr[-2000:]
         assert len(first.stdout.splitlines()) == 1  # the dump at exit logs nothing there
+        assert json.loads(first.stdout)["codegen_cache"] == "2000"
         assert sorted(p.suffix for p in cache.iterdir()) == ["", ".jsa", ".rec"]  # conf dir
 
         log = tmp_path / "class-load.log"

@@ -14,7 +14,7 @@ import pytest
 from conftest import SF_DIR
 
 from odc_product_docker_images_spark.scratch import fresh
-from odc_product_docker_images_spark.sources.versioned import VersionedTable
+from odc_product_docker_images_spark.sources.versioned import CommitConflict, VersionedTable
 
 
 def _table() -> VersionedTable:
@@ -325,6 +325,69 @@ def test_shallow_clone_shares_files_and_diverges(spark):
     assert dropped == 1
     assert all(Path(f).exists() for f in src_files)
     assert src.read(spark).count() == before_rows
+
+
+def test_concurrent_appends_lose_no_commit(spark, monkeypatch):
+    """Eight writers append one file each to a new table and commit at
+    once (a barrier holds each until all eight files are written): every
+    commit gets its own version and the head lists all eight files."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    t = _table()
+    written = threading.Barrier(8)
+    write_data = VersionedTable._write_data
+
+    def write_then_wait(self, df, n_files):
+        files = write_data(self, df, n_files)
+        written.wait(timeout=300)
+        return files
+
+    monkeypatch.setattr(VersionedTable, "_write_data", write_then_wait)
+
+    def append(i: int) -> int:
+        table = VersionedTable(str(t.path), stat_cols=["k"])
+        return table.write(spark.range(i, i + 1).toDF("k"), n_files=1)
+
+    with ThreadPoolExecutor(8) as pool:
+        versions = list(pool.map(append, range(8)))
+    assert sorted(versions) == list(range(8))
+    assert t.versions() == list(range(8))
+    assert t.file_count() == 8
+    assert sorted(r.k for r in t.read(spark).collect()) == list(range(8))
+    assert not list(t.manifest_dir.glob(".v*"))  # no temp manifest left
+
+
+@pytest.mark.parametrize("op", ["compact", "merge", "restore", "overwrite"])
+def test_commit_on_a_stale_snapshot_raises(spark, monkeypatch, op):
+    """Another writer commits just after ``op`` reads the head: ``op``
+    raises a conflict naming the table and the version, the other commit
+    stays the head, and no temp manifest is left."""
+    t = _table()
+    df = spark.range(100).select(F.col("id").alias("k"), (F.col("id") * 1.0).alias("v"))
+    t.write(df, mode="overwrite", n_files=2)
+    latest_version = t.latest_version
+
+    def racing():
+        read = latest_version()
+        monkeypatch.undo()
+        VersionedTable(str(t.path)).write(df.limit(1), n_files=1)
+        return read
+
+    monkeypatch.setattr(t, "latest_version", racing)
+    with pytest.raises(CommitConflict, match=f"{t.path}: version 1 ") as err:
+        if op == "compact":
+            t.compact(spark)
+        elif op == "merge":
+            t.merge(spark, df.where("k < 5").select("k", F.lit(-1.0).alias("v")), key="k")
+        elif op == "restore":
+            t.restore(0)
+        else:
+            t.write(df, mode="overwrite")
+    assert (err.value.path, err.value.version) == (t.path, 1)
+    assert t.versions() == [0, 1]
+    assert t._manifest(1)["operation"] == "append"
+    assert not list(t.manifest_dir.glob(".v*"))
 
 
 def test_every_commit_records_its_schema(spark):

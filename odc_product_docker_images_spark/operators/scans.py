@@ -168,20 +168,14 @@ _TILE_SCAN_ORACLE = f"""
     """
 
 
-def _ndvi_cells(spark: SparkSession, source: str, **options: str) -> DataFrame:
-    """Read 4×4 tiles of 32² pixels from a tile source, then NDVI band
-    math → regrid (floor-divide grid binning, the GeoBox cell-id trick) →
-    per-cell composite.  One shuffle (the regrid groupBy); tile reads are
-    independent executor tasks."""
-    from ..sources.tile_source import TILE_SCHEMA, register_tile_source
+def _ndvi_cells(spark: SparkSession, blob_dir: str | None = None) -> DataFrame:
+    """Read 4×4 tiles of 32² pixels (``tile_source.tile_pixels``), then
+    NDVI band math → regrid (floor-divide grid binning, the GeoBox cell-id
+    trick) → per-cell composite.  One shuffle (the regrid groupBy); tile
+    reads are independent executor tasks."""
+    from ..sources.tile_source import tile_pixels
 
-    register_tile_source(spark)
-    px = (
-        spark.read.format(source)
-        .schema(TILE_SCHEMA)
-        .options(tiles="4", tile_size="32", **options)
-        .load()
-    )
+    px = tile_pixels(spark, tiles=4, tile_size=32, blob_dir=blob_dir)
     ndvi = (px["nir"] - px["red"]) / (px["nir"] + px["red"] + F.lit(1e-9))
     cell = [F.floor(F.col("y") / 16).cast("long").alias("cell_y"),
             F.floor(F.col("x") / 16).cast("long").alias("cell_x")]
@@ -197,7 +191,7 @@ def _ndvi_cells(spark: SparkSession, source: str, **options: str) -> DataFrame:
 
 @register("source_tile_scan", oracle=_TILE_SCAN_ORACLE)
 def source_tile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S2: the Datacube.load pipeline on the custom Python DataSource —
+    """S2: the Datacube.load pipeline as a ``mapInArrow`` tile scan —
     per-tile parallel read → NDVI band math → regrid → per-cell composite.
 
     The source's pixel formula is deterministic integer arithmetic
@@ -206,13 +200,13 @@ def source_tile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINT cast (DuckDB's double→int cast ROUNDS, Spark's truncates) and
     the cell mean through the exact decimal path (a bare AVG of doubles is
     summation-order-dependent)."""
-    return _ndvi_cells(spark, "synthetic_tiles")
+    return _ndvi_cells(spark)
 
 
 @register("source_tile_scan_tiff", oracle=_TILE_SCAN_ORACLE)
 def source_tile_scan_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2: ``source_tile_scan``'s pipeline with the GDAL-shaped read made
-    REAL — each DataSource partition opens and decodes actual striped
+    REAL — each tile's read task opens and decodes actual striped
     GeoTIFF blobs (the ``multimodal/geotiff.py`` reader: header, IFD,
     out-of-line strip offset/byte-count arrays, geo tags) instead of
     synthesizing pixels arithmetically.  The blob store is generated
@@ -224,7 +218,7 @@ def source_tile_scan_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape; at 100 TB the blob dir is the object bucket."""
     from ..sources.tile_source import ensure_tiff_tiles
 
-    return _ndvi_cells(spark, "tiff_tiles", path=ensure_tiff_tiles(tiles=4, tile_size=32))
+    return _ndvi_cells(spark, blob_dir=ensure_tiff_tiles(tiles=4, tile_size=32))
 
 
 @register(

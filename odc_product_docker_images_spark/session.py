@@ -15,7 +15,9 @@ testing but every knob is the one you would tune on a 1000-executor cluster:
   daemons Spark starts to plan a Python data source (``-m pyspark.daemon``
   running ``pyspark.sql.worker.create_data_source``,
   ``lookup_data_sources`` and ``plan_data_source_read``) do not: Spark
-  starts those with the stock daemon, so they get no zip guard.
+  starts those with the stock daemon, so they get no zip guard.  Only
+  ``source_stream_feed`` (the ``synthetic_feed`` streaming source) starts
+  them; the tile scans are ``mapInArrow`` passes.
 - The driver JVM maps a class-data archive (AppCDS, JEP 350) of the ~16k
   Spark, Scala and Parquet classes a run loads, so a later start neither
   parses nor verifies them again.  The first launch on a host records it

@@ -107,17 +107,24 @@ def test_approx_distinct_within_error(spark):
 
 
 def test_tile_source_partition_parallelism(spark):
-    from odc_product_docker_images_spark.sources.tile_source import register_tile_source
+    from odc_product_docker_images_spark.sources.tile_source import tile_pixels
 
-    register_tile_source(spark)
-    px = (
-        spark.read.format("synthetic_tiles")
-        .option("tiles", "3")
-        .option("tile_size", "8")
-        .load()
-    )
+    px = tile_pixels(spark, tiles=3, tile_size=8)
     assert px.rdd.getNumPartitions() == 9  # one task per tile
     assert px.count() == 9 * 64
+
+
+@pytest.mark.parametrize("key", ["source_tile_scan", "source_tile_scan_tiff"])
+def test_tile_scan_is_one_arrow_pass_without_python_datasource(spark, key):
+    """Both tile scans read their pixels in ONE MapInArrow pass over
+    ``spark.range``: no Python DataSource scan, whose planning starts
+    three extra Python daemons per session."""
+    from odc_product_docker_images_spark.operators import scans
+
+    plan = C.formatted_plan(getattr(scans, key)(spark, SF))
+    physical = plan.split("\n\n")[0]  # the operator tree, one line per node
+    assert physical.count("MapInArrow") == 1
+    assert "BatchScan" not in plan and "(Python)" not in plan
 
 
 def test_regrid_prunes_and_partial_aggregates(spark):

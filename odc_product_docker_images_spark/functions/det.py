@@ -325,53 +325,6 @@ def davg_fast(col: Column | str, alias: str) -> Column:
     )
 
 
-def _fast_dec_sum_wide(col: Column | str) -> Column:
-    """:func:`_fast_dec_sum` with a THIRD long lane, widening the
-    per-group domain from ~7.5e12 to ~6.1e16 (Σ|x|·10^10/2^26 must fit
-    int64).  Per-addend domain unchanged (|x| < 9.2e8).  Exactness: for
-    any sign, ``u == (u>>26)·2^26 + ((u>>13)&8191)·2^13 + (u&8191)`` —
-    arithmetic shift is floor division and each masked part is its
-    non-negative remainder — so the three part sums reassemble
-    ``total·10^10`` exactly, and the scale-restoring divide pre-rounds
-    at 6 dp exactly like the 2-lane form.  Cost: one extra shift/mask
-    per row and one extra long sum buffer per aggregate.
-
-    Built for the flagship-scale revenue sums: at a true 100 TB grain a
-    per-group Σ revenue passes the 2-lane accumulator's 7.5e12 ceiling
-    around SF 1e4-1e5 (SCALING.md hop-domain audit, r10)."""
-    base = 1 << 13
-    xd = dec_cast(col)
-    u = (xd * F.lit(10**10).cast("decimal(11,0)")).cast("long")
-    lo = u.bitwiseAND(F.lit(base - 1))
-    mid = F.shiftright(u, 13).bitwiseAND(F.lit(base - 1))
-    hi = F.shiftright(u, 26)
-    scaled = (
-        F.sum(hi).cast("decimal(38,0)") * F.lit(1 << 26).cast("decimal(9,0)")
-        + F.sum(mid).cast("decimal(38,0)") * F.lit(base).cast("decimal(5,0)")
-        + F.sum(lo).cast("decimal(38,0)")
-    )
-    return scaled / F.lit(10**10).cast("decimal(11,0)")
-
-
-def dsum_fast_wide(col: Column | str, alias: str) -> Column:
-    """:func:`dsum_wide` with 3-lane long-split accumulation — the fast
-    path for revenue-scale sums whose per-group total can cross the
-    nd=6 hop domain.  Bit-identical to ``dsum_wide``/``sql_dsum_wide``
-    at any magnitude: both pre-round at 6 dp (the fast divide here, the
-    explicit ROUND in the hop) and the wide hop's 0 dp branch rounds the
-    6 dp value, so there is no double-rounding divergence."""
-    return exact_double_wide(_fast_dec_sum_wide(col)).alias(alias)
-
-
-def davg_fast_wide(col: Column | str, alias: str) -> Column:
-    """:func:`davg` on the 3-lane wide path (shares its sum buffers with
-    :func:`dsum_fast_wide` on the same expression)."""
-    c = _c(col)
-    return (exact_double_wide(_fast_dec_sum_wide(c)) / F.count(c).cast("double")).alias(
-        alias
-    )
-
-
 def davg(col: Column | str, alias: str, nd: int = 6) -> Column:
     """Deterministic average: bit-identical rounded sum / count, one IEEE divide.
 

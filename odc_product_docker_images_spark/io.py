@@ -26,7 +26,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from . import schemas
 from .scratch import fixture_tag
 
 # Tables whose feed-style timestamp column has shipped in different
@@ -66,12 +65,12 @@ def fanout(obj: SparkSession | DataFrame) -> int:
 
     Result-invariance contract (why the count is a free parameter at
     every call site): round-robin/hash fan-outs feed order-insensitive
-    aggregates or key-partitioned windows, and the
-    ``repartitionByRange`` + ``spark_partition_id`` prefix-sum sites
-    derive their global ranks as (local rank + per-pid offset) where the
-    offsets come from the ACTUAL pids of the materialized partitioning —
-    the reconstruction depends only on the global sort order, never on
-    how many range slices carried it.  Sites where a count feeds results
+    aggregates or key-partitioned windows, and the prefix-sum sites
+    (``functions.prefix.global_prefix``) derive their global ranks as
+    (local rank + per-pid offset) where the offsets come from the ACTUAL
+    pids of the materialized partitioning — the reconstruction depends
+    only on the global sort order, never on how many range slices
+    carried it.  Sites where a count feeds results
     (bucketed-layout bucket counts, versioned-table file counts, stream
     feed ntile) keep their literals and are NOT routed through here.
 
@@ -113,9 +112,8 @@ def table_rows(sf_dir: str, table: str) -> int:
     return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
 
 
-def load(spark: SparkSession, sf_dir: str, table: str, validate: bool = False) -> DataFrame:
-    """Scan one fixture table. Declared-schema validation optional (cheap,
-    footer-only) per the fixed-schema policy (schemas.py)."""
+def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """Scan one fixture table."""
     nanos_cols = _NANOS_TS.get(table, [])
     # session-wide, so set on every load: the memo never holds a schema
     # inferred under the other value
@@ -137,8 +135,6 @@ def load(spark: SparkSession, sf_dir: str, table: str, validate: bool = False) -
             # micros, isAdjustedToUTC=false — same wall-clock under the
             # pinned UTC session zone
             df = df.withColumn(c, F.col(c).cast("timestamp"))
-    if validate:
-        schemas.validate(df.schema, table)
     return df
 
 

@@ -15,10 +15,9 @@ Two operators:
   over the orders fact (the classic customer-segmentation rollup).  The
   quartile assignment needs a GLOBAL ordering per metric; a plain
   ``NTILE(4) OVER (ORDER BY …)`` would funnel the whole customer
-  dimension through one task, so each metric instead gets the
-  distributed-rank treatment (``agg_gini``'s range-partition +
-  prefix-offset pattern) and the NTILE bucket is derived from
-  (rank, n) with exact integer arithmetic.
+  dimension through one task, so each metric instead gets
+  ``global_prefix``'s distributed rank and the NTILE bucket is derived
+  from (rank, n) with exact integer arithmetic.
 """
 
 from __future__ import annotations
@@ -27,6 +26,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.det import dsum, sql_dsum
+from ..functions.prefix import global_prefix
 from ..io import fanout, load
 from ..registry import register
 
@@ -105,45 +105,6 @@ def _ntile_from_rank(rk: Column, n: Column, k: int) -> Column:
     )
 
 
-def _global_rank(df: DataFrame, score_name: str, *sort_cols: str) -> DataFrame:
-    """Attach ``score_name`` = NTILE(4) of the GLOBAL ordering by
-    ``sort_cols`` without a single-task window: range-partition on the
-    full sort key, rank locally per partition, and add per-partition
-    prefix offsets from a tiny broadcast rollup (the ``agg_gini``
-    pattern).  The input is persisted so the offsets rollup and the
-    ranked stream see the same sampled range boundaries."""
-    rp = df.repartitionByRange(fanout(df), *sort_cols).withColumn(
-        "pid", F.spark_partition_id()
-    ).persist()  # two consumers (offsets + ranked stream) — annotated
-    # tiny frame (≤32 rows): the no-partition windows are fine here, and
-    # both share one window spec (same ordering, different frames) so they
-    # plan as a single Sort + WindowExec
-    woff = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    wall = Window.orderBy("pid").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    offsets = (
-        rp.groupBy("pid")
-        .agg(F.count(F.lit(1)).alias("pn"))
-        .withColumn("off", F.coalesce(F.sum("pn").over(woff), F.lit(0)))
-        .withColumn("n_total", F.sum("pn").over(wall))
-        .select("pid", "off", "n_total")
-    )
-    wloc = Window.partitionBy("pid").orderBy(*sort_cols)
-    ranked = (
-        rp.withColumn("local_rn", F.row_number().over(wloc).cast("bigint"))
-        .join(F.broadcast(offsets), "pid")
-        .withColumn(
-            score_name,
-            _ntile_from_rank(
-                F.col("off") + F.col("local_rn"), F.col("n_total"), _NTILE_K
-            ),
-        )
-        .drop("pid", "local_rn", "off", "n_total")
-    )
-    return ranked
-
-
 @register(
     "agg_rfm_segments",
     oracle=f"""
@@ -193,21 +154,17 @@ def agg_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             dsum("o_totalprice", "monetary"),
         )
     )
-    # negate recency for the DESC ordering (rank ascending = oldest first
-    # is wrong for R: score 4 must be the most recent → order DESC)
-    c = c.withColumn("neg_recency", -F.col("recency_days"))
-    c = _global_rank(c, "r_score", "neg_recency", "c_custkey")
-    c = _global_rank(c, "f_score", "frequency", "c_custkey")
-    c = _global_rank(c, "m_score", "monetary", "c_custkey")
-    return c.select(
-        "c_custkey",
-        "recency_days",
-        "frequency",
-        "monetary",
-        "r_score",
-        "f_score",
-        "m_score",
-    )
+    # score 4 = most recent / most frequent / highest spend
+    for score, first in (
+        ("r_score", F.desc("recency_days")),
+        ("f_score", F.col("frequency")),
+        ("m_score", F.col("monetary")),
+    ):
+        c = global_prefix(c, [first, "c_custkey"]).select(
+            *c.columns,
+            _ntile_from_rank(F.col("rk"), F.col("n"), _NTILE_K).alias(score),
+        )
+    return c
 
 
 _ABS_T = ("click", "signup", "view")  # transient states (alphabetical)

@@ -46,6 +46,7 @@ from ..functions.det import (
     sql_exact_double,
     sql_exact_double_wide,
 )
+from ..functions.prefix import global_prefix
 from ..io import fanout, load
 from ..registry import register
 
@@ -818,34 +819,17 @@ def ml_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate: the standard campaign-targeting / model-evaluation report.
 
     The global decile needs a TOTAL ordering — a plain global
-    row_number would sort the corpus in one task, so the rank is
-    DISTRIBUTED (the agg_gini pattern): range-partition on the full
-    sort key, row_number within each partition, plus per-partition
-    offsets from a ≤32-row broadcast rollup; the global n rides the
-    same tiny rollup.  Decile arithmetic is exact integers under FLOOR
-    (both-sides convention); rates and lift are IEEE divides of exact
-    counts.  The oracle states the same semantics in its native global
-    window form — distributed rank == global rank is the proof."""
-    rp = (
-        load(spark, sf_dir, "events")
-        .select("event_type", "value", "event_id")
-        .repartitionByRange(fanout(spark), "value", "event_id")
-        .withColumn("pid", F.spark_partition_id())
-    ).persist()
-    wloc = Window.partitionBy("pid").orderBy("value", "event_id")
-    loc = rp.withColumn("local_rn", F.row_number().over(wloc).cast("bigint"))
-    woff = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = (
-        rp.groupBy("pid")
-        .agg(F.count(F.lit(1)).alias("pn"))
-        .withColumn("off", F.coalesce(F.sum("pn").over(woff), F.lit(0)))
-        .withColumn("n", F.sum("pn").over(Window.partitionBy()))
-        .select("pid", "off", "n")
-    )
-    ranked = loc.join(F.broadcast(offsets), "pid").select(
-        (F.col("off") + F.col("local_rn")).alias("rk"),
-        "n",
-        (F.col("event_type") == "purchase").cast("int").alias("conv"),
+    row_number would sort the corpus in one task, so the rank and the
+    global n come from ``global_prefix``'s distributed scan.  Decile
+    arithmetic is exact integers under FLOOR (both-sides convention);
+    rates and lift are IEEE divides of exact counts.  The oracle states
+    the same semantics in its native global window form — distributed
+    rank == global rank is the proof."""
+    ranked = global_prefix(
+        load(spark, sf_dir, "events").select("event_type", "value", "event_id"),
+        ["value", "event_id"],
+    ).select(
+        "rk", "n", (F.col("event_type") == "purchase").cast("int").alias("conv")
     )
     decile = (
         F.floor(((F.col("n") - F.col("rk")) * 10).cast("double") / F.col("n"))
@@ -906,31 +890,17 @@ def agg_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     probability a random a-draw exceeds a random b-draw), with the
     midrank tie correction the textbook statistic requires.
 
-    Spark-first: the global order comes from the DISTRIBUTED rank
-    (range-partition + offset broadcast — the agg_gini pattern);
+    Spark-first: the global order comes from ``global_prefix``'s
+    distributed rank;
     midranks are (min+max)/2 windows over each tied VALUE partition;
     per-variant rank sums are exact (midranks are halves, so 2·ark sums
     as integers and halves once at the edge); the variant-pair expansion
     reuses the t-test's one-row array self-cross.  Determinism: pure
     integer arithmetic until two final IEEE divides."""
-    rp = (
-        load(spark, sf_dir, "events")
-        .select("event_type", "value", "event_id")
-        .repartitionByRange(fanout(spark), "value", "event_id")
-        .withColumn("pid", F.spark_partition_id())
-    ).persist()
-    wloc = Window.partitionBy("pid").orderBy("value", "event_id")
-    loc = rp.withColumn("local_rn", F.row_number().over(wloc).cast("bigint"))
-    woff = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = (
-        rp.groupBy("pid")
-        .agg(F.count(F.lit(1)).alias("pn"))
-        .withColumn("off", F.coalesce(F.sum("pn").over(woff), F.lit(0)))
-        .select("pid", "off")
-    )
-    ranked = loc.join(F.broadcast(offsets), "pid").select(
-        "event_type", "value", (F.col("off") + F.col("local_rn")).alias("rk")
-    )
+    ranked = global_prefix(
+        load(spark, sf_dir, "events").select("event_type", "value", "event_id"),
+        ["value", "event_id"],
+    ).select("event_type", "value", "rk")
     wv = Window.partitionBy("value")
     tied = ranked.select(
         "event_type",
@@ -1337,58 +1307,25 @@ def agg_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     class A = the head covering 70% of cumulative revenue, B to 90%,
     C the tail: the standard assortment/working-capital segmentation.
 
-    The cumulative share needs a TOTAL descending ordering, so both the
-    rank AND the revenue prefix ride the distributed-rank pattern
-    (agg_gini/ml_lift_table): range-partition the #parts-row aggregate
-    on the sort key, one window per partition for the local decimal
-    prefix, exclusive offsets + grand total from a ≤32-row broadcast
-    rollup (partition totals = max of the increasing local prefix, so
-    the offsets branch shares the subtree).  The cumulative share is
-    ROUNDED 6 dp before the 0.7/0.9 threshold compares on both engines
-    so a class boundary can never flip on a cross-engine ulp."""
+    The cumulative share needs a TOTAL descending ordering, so the
+    revenue prefix and its total come from ``global_prefix``'s
+    distributed scan over the #parts-row aggregate, as exact decimals;
+    each takes the wide hop once, as in the oracle (the prefix reaches
+    GLOBAL revenue in its last cell — past the nd=6 hop at ~290x).  The
+    cumulative share is ROUNDED 6 dp before the 0.7/0.9 threshold
+    compares on both engines so a class boundary can never flip on a
+    cross-engine ulp."""
     li = load(spark, sf_dir, "lineitem")
     part_rev = li.groupBy("l_partkey").agg(
         dsum(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), "rev")
     )
-    rp = (
-        part_rev.withColumn("nrev", -F.col("rev"))
-        .repartitionByRange(fanout(spark), "nrev", "l_partkey")
-        .withColumn("pid", F.spark_partition_id())
-    ).persist()  # two consumers (ranked rows + offsets rollup), parts-sized
-    wloc = (
-        Window.partitionBy("pid")
-        .orderBy("nrev", "l_partkey")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    # the cumulative prefix reaches GLOBAL revenue in its last cell —
-    # past the nd=6 hop at ~290x (hop-domain audit) — so the whole
-    # prefix/offset/total chain rides the WIDE hop; bit-identical
-    # in-domain, no graded hash moves
-    loc = rp.withColumn(
-        "local_cum", exact_double_wide(F.sum(dec_cast("rev")).over(wloc))
-    )
-    woff = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    wall_p = Window.orderBy("pid").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    offsets = (
-        loc.groupBy("pid")
-        .agg(F.max("local_cum").alias("prev"))
-        .withColumn(
-            "off",
-            F.coalesce(
-                exact_double_wide(F.sum(dec_cast("prev")).over(woff)), F.lit(0.0)
-            ),
-        )
-        .withColumn(
-            "total_rev", exact_double_wide(F.sum(dec_cast("prev")).over(wall_p))
-        )
-        .select("pid", "off", "total_rev")
+    ranked = global_prefix(
+        part_rev, [F.desc("rev"), "l_partkey"], sums={"cum": dec_cast("rev")}
     )
     share = dround(
-        (F.col("off") + F.col("local_cum")) / F.col("total_rev")
+        exact_double_wide(F.col("cum")) / exact_double_wide(F.col("cum_total"))
     )
-    classed = loc.join(F.broadcast(offsets), "pid").select(
+    classed = ranked.select(
         "rev",
         F.when(share <= 0.7, F.lit("A"))
         .when(share <= 0.9, F.lit("B"))
@@ -1543,50 +1480,20 @@ def agg_lorenz_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank where rk·10 ≡ 0 (mod n), evaluated in EXACT integer arithmetic
     so edge membership can't float.
 
-    Same distributed-rank machinery as gini/ABC: range-partition the
-    per-customer aggregate on the sort key, local rank + decimal
-    revenue prefix, exclusive offsets from the ≤32-row broadcast
-    rollup.  Shares round 6 dp."""
+    Same distributed scan as gini/ABC (``global_prefix`` over the
+    per-customer aggregate): rank, group size, and the exact decimal
+    revenue prefix and total, each through the wide hop once as in the
+    oracle.  Shares round 6 dp."""
     od = load(spark, sf_dir, "orders")
     per_cust = od.groupBy("o_custkey").agg(dsum("o_totalprice", "rev"))
-    rp = (
-        per_cust.repartitionByRange(fanout(spark), "rev", "o_custkey")
-        .withColumn("pid", F.spark_partition_id())
-    ).persist()  # rank + offsets rollup both consume it (customers-sized)
-    w_loc = (
-        Window.partitionBy("pid")
-        .orderBy("rev", "o_custkey")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    # cumulative-revenue prefix: WIDE hop, same rationale as the ABC key
-    loc = rp.withColumn("lrk", F.count(F.lit(1)).over(w_loc)).withColumn(
-        "lcum", exact_double_wide(F.sum(dec_cast("rev")).over(w_loc))
-    )
-    woff = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    wall_p = Window.orderBy("pid").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    offsets = (
-        loc.groupBy("pid")
-        .agg(F.max("lrk").alias("pn"), F.max("lcum").alias("prev"))
-        .withColumn("rk_off", F.coalesce(F.sum("pn").over(woff), F.lit(0)))
-        .withColumn(
-            "cum_off",
-            F.coalesce(
-                exact_double_wide(F.sum(dec_cast("prev")).over(woff)), F.lit(0.0)
-            ),
-        )
-        .withColumn("n", F.sum("pn").over(wall_p).cast("long"))
-        .withColumn("tot", exact_double_wide(F.sum(dec_cast("prev")).over(wall_p)))
-        .select("pid", "rk_off", "cum_off", "n", "tot")
-    )
-    ranked = loc.join(F.broadcast(offsets), "pid").select(
-        (F.col("rk_off") + F.col("lrk")).alias("rk"),
-        (F.col("cum_off") + F.col("lcum")).alias("cum_rev"),
+    ranked = global_prefix(
+        per_cust, ["rev", "o_custkey"], sums={"cum": dec_cast("rev")}
+    ).select(
+        "rk",
         "n",
-        "tot",
+        exact_double_wide(F.col("cum")).alias("cum_rev"),
+        exact_double_wide(F.col("cum_total")).alias("tot"),
     )
-    edge = (F.col("rk") * 10 / F.col("n")).cast("long")
     is_edge = ((F.col("rk") * 10) % F.col("n") == 0) | (F.col("rk") == F.col("n"))
     return (
         ranked.where(is_edge)

@@ -11,9 +11,10 @@ the decimal path, and libm steps round 4-6 dp at a pinned point.
 
 Scale notes (100 TB): the KS statistic is a GLOBAL ECDF comparison — the
 naive form is a single-task global window over every distinct value.
-Here the ECDF prefix counts use the shard_pack distributed-prefix
-pattern: range-partition by value, cumsum within partitions in parallel,
-add a ≤32-row broadcast offset table.  The argmax row is a
+Here the ECDF prefix counts use a value-bucket form of the two-pass
+scan in ``functions/prefix.py``: partition by a fixed-width value
+bucket, cumsum within buckets in parallel, add a broadcast offset table
+of bucket totals.  The argmax row is a
 TakeOrderedAndProject (limit 1), never a full sort.  ANOVA is one
 map-side-combinable aggregate over the corpus followed by arithmetic on
 a #groups-row table.

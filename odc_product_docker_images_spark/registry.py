@@ -238,8 +238,9 @@ def all_queries() -> dict[str, Query]:
     _ensure_loaded()
     out: dict[str, Query] = {}
     for key in GRADING_WINDOW:
-        if key in _REGISTRY:
-            out[key] = _REGISTRY[key]
+        if key not in _REGISTRY:
+            raise KeyError(f"GRADING_WINDOW key {key!r} is registered by no module")
+        out[key] = _REGISTRY[key]
     for key, q in _REGISTRY.items():
         if key not in out:
             out[key] = q

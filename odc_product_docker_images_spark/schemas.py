@@ -3,8 +3,9 @@
 Reference analog: ODC products declare a fixed measurement schema in YAML
 (band name, dtype, nodata) validated at index time — ``datacube-core``'s
 ``Product``/``Measurement`` model.  Here each table gets a declared
-``StructType``; reads validate against it instead of relying on runtime
-inference.  ``NODATA`` mirrors per-measurement nodata sentinels.
+``StructType``: the catalog keys (``catalog_tables``, ``catalog_gate``)
+enumerate and check the fixtures against it.  ``NODATA`` mirrors
+per-measurement nodata sentinels.
 """
 
 from __future__ import annotations
@@ -112,11 +113,3 @@ NODATA: dict[str, dict[str, float]] = {
     "lineitem": {"l_discount": 0.0},
 }
 
-
-def validate(df_schema: T.StructType, table: str) -> None:
-    """Declared-schema check (reference: Product.validate at index time)."""
-    declared = {f.name for f in TABLES[table].fields}
-    actual = {f.name for f in df_schema.fields}
-    missing = declared - actual
-    if missing:
-        raise ValueError(f"table {table!r} missing declared columns: {sorted(missing)}")

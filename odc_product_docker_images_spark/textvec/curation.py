@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.prefix import global_prefix
 from ..io import fanout, load
 from ..registry import register
 from .shingle import _shingles
@@ -192,6 +193,15 @@ def data_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SHARD_TOKENS = 2000  # shard budget; fixture docs are ~25-60 tokens
 
 
+def _shard_ids(w: DataFrame) -> DataFrame:
+    """``w`` (doc_id, n_tokens, ...) plus ``shard_id``: the shard that
+    holds each document's first token in the doc_id-ordered stream."""
+    start = F.col("tok") - F.col("n_tokens")
+    return global_prefix(w, ["doc_id"], sums={"tok": "n_tokens"}).withColumn(
+        "shard_id", F.floor(start / _SHARD_TOKENS).cast("bigint")
+    )
+
+
 @register(
     "shard_pack",
     oracle=f"""
@@ -217,41 +227,12 @@ def shard_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     global token stream: the tokenizer-sharding step between curation and
     training.
 
-    The global prefix sum is computed DISTRIBUTED, never as a
-    single-task global window: range-partition by doc_id, cumsum within
-    each partition in parallel, then add per-partition offsets from a
-    partition-count-sized rollup (broadcast join).  The oracle's plain
-    global window is the semantic twin; partition boundaries cannot
-    change the result."""
+    The global prefix sum is ``global_prefix``'s distributed scan,
+    never a single-task global window.  The oracle's plain global window
+    is the semantic twin; slice boundaries cannot change the result."""
     dc = load(spark, sf_dir, "documents")
-    # persisted: the offsets rollup and the packed stream BOTH read this
-    # frame — without the pin, each branch re-executes the range exchange
-    # and AQE may coalesce the two executions' partitions differently
-    # (column pruning can diverge the branch plans), so spark_partition_id
-    # stops being consistent between them and the offsets join scrambles
-    # the assignment (caught by shard_manifest_checksum at the 10x grain:
-    # its extra md5 column broke the exchange reuse this key silently
-    # relied on).  Same pin as every other prefix-sum site (agg_gini,
-    # behavior.py, metrics.py).
-    w = dc.select(
-        "doc_id", F.size(F.split(F.col("text"), " ")).alias("n_tokens")
-    ).repartitionByRange(fanout(spark), "doc_id")
-    w = w.withColumn("pid", F.spark_partition_id()).persist()
-    within = Window.partitionBy("pid").orderBy("doc_id")
-    w = w.withColumn("local_cum", F.sum("n_tokens").over(within))
-    # per-partition totals → exclusive prefix over the (≤32-row) table
-    off_w = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = (
-        w.groupBy("pid")
-        .agg(F.sum("n_tokens").alias("ptot"))
-        .withColumn("off", F.coalesce(F.sum("ptot").over(off_w), F.lit(0)))
-        .select("pid", "off")
-    )
-    start = F.col("off") + F.col("local_cum") - F.col("n_tokens")
-    packed = w.join(F.broadcast(offsets), "pid").select(
-        "doc_id",
-        "n_tokens",
-        F.floor(start / _SHARD_TOKENS).cast("bigint").alias("shard_id"),
+    packed = _shard_ids(
+        dc.select("doc_id", F.size(F.split(F.col("text"), " ")).alias("n_tokens"))
     )
     return packed.groupBy("shard_id").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -306,38 +287,23 @@ def shard_manifest_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     single changed/dropped/duplicated document flips its shard's row.
 
     Scale shape: identical to shard_pack — the global token prefix sum is
-    DISTRIBUTED (range partition by doc_id, parallel within-partition
-    cumsum, broadcast per-partition offsets; no single-task global
-    window), and the checksum is an XOR so it map-side combines inside
-    the same per-shard hash aggregate.  Cross-engine exactness rides the
-    md5-hex and integer-fold bridges established by
-    table_content_checksum (sources/bloom.py)."""
+    ``global_prefix``'s distributed scan (no single-task global window),
+    and the checksum is an XOR so it map-side combines inside the same
+    per-shard hash aggregate.  Cross-engine exactness rides the md5-hex
+    and integer-fold bridges established by table_content_checksum
+    (sources/bloom.py)."""
     dc = load(spark, sf_dir, "documents")
     h = F.md5(F.concat_ws("|", F.col("doc_id").cast("string"), F.col("text")))
-    # persisted: offsets rollup + packed stream both read this frame; the
-    # md5 column makes the two branches' pruned schemas DIFFER, so exchange
-    # reuse cannot rescue an unpinned pid here (it flipped nondeterministic
-    # at 10x before the pin — see shard_pack's annotation).
-    w = dc.select(
-        "doc_id",
-        F.size(F.split(F.col("text"), " ")).alias("n_tokens"),
-        h.alias("h"),
-    ).repartitionByRange(fanout(spark), "doc_id")
-    w = w.withColumn("pid", F.spark_partition_id()).persist()
-    within = Window.partitionBy("pid").orderBy("doc_id")
-    w = w.withColumn("local_cum", F.sum("n_tokens").over(within))
-    off_w = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = (
-        w.groupBy("pid")
-        .agg(F.sum("n_tokens").alias("ptot"))
-        .withColumn("off", F.coalesce(F.sum("ptot").over(off_w), F.lit(0)))
-        .select("pid", "off")
-    )
-    start = F.col("off") + F.col("local_cum") - F.col("n_tokens")
-    packed = w.join(F.broadcast(offsets), "pid").select(
+    packed = _shard_ids(
+        dc.select(
+            "doc_id",
+            F.size(F.split(F.col("text"), " ")).alias("n_tokens"),
+            h.alias("h"),
+        )
+    ).select(
         "doc_id",
         "n_tokens",
-        F.floor(start / _SHARD_TOKENS).cast("bigint").alias("shard_id"),
+        "shard_id",
         F.conv(F.substring("h", 1, 8), 16, 10).cast("long").alias("w1"),
         F.conv(F.substring("h", 9, 8), 16, 10).cast("long").alias("w2"),
     )

@@ -9,6 +9,8 @@ frame.
 
 from __future__ import annotations
 
+import pytest
+
 from odc_product_docker_images_spark import registry
 
 
@@ -17,6 +19,16 @@ def test_oracle_keys_subset_of_queries(spark):
     os_ = registry.oracle_sql()
     assert set(os_) <= set(qs)
     assert all(isinstance(v, str) and v.strip() for v in os_.values())
+
+
+def test_unregistered_window_key_raises(monkeypatch):
+    """A GRADING_WINDOW key that no module registers is an error that
+    names it, never a key silently missing from the driver's map."""
+    monkeypatch.setattr(
+        registry, "GRADING_WINDOW", [*registry.GRADING_WINDOW, "no_such_key"]
+    )
+    with pytest.raises(KeyError, match="no_such_key"):
+        registry.all_queries()
 
 
 def test_grading_window_holds_showcase_surface():

@@ -233,20 +233,12 @@ def test_dsum_wide_matches_duckdb(spark_global, rows):
     assert canon_rows(got) == canon_rows(want)
 
 
-def test_fast_wide_three_lane_bit_identity(spark_global):
-    """r10: the 3-lane long-split (dsum_fast_wide) must be bit-identical
-    to the decimal wide path AND its DuckDB twin across the 9e12 hop
-    boundary, and to the 2-lane fast path in-domain.  It is the
-    documented >SF-1e4 configuration for the flagship's price-scale
-    sums (kept out of the graded key: the third lane A/B-measured +35%
-    on that aggregate)."""
+def test_dsum_wide_hop_boundary_bit_identity(spark_global):
+    """``dsum_wide`` must be bit-identical to its DuckDB twin on group
+    sums on both sides of the 9e12 hop boundary (30k rows a group)."""
     import numpy as np
 
     from odc_product_docker_images_spark.functions.det import (
-        davg_fast,
-        davg_fast_wide,
-        dsum_fast,
-        dsum_fast_wide,
         dsum_wide,
         sql_dsum_wide,
     )
@@ -262,13 +254,7 @@ def test_fast_wide_three_lane_bit_identity(spark_global):
         ignore_index=True,
     )
     sdf = spark.createDataFrame(pdf).repartition(8)
-    got = (
-        sdf.groupBy("k")
-        .agg(dsum_wide("v", "w"), dsum_fast_wide("v", "fw"))
-        .orderBy("k")
-        .toPandas()
-    )
-    assert (got["w"] == got["fw"]).all()
+    got = sdf.groupBy("k").agg(dsum_wide("v", "w")).orderBy("k").toPandas()
     con = duckdb.connect()
     con.register("t", pdf)
     want = con.execute(
@@ -276,15 +262,3 @@ def test_fast_wide_three_lane_bit_identity(spark_global):
     ).df()
     con.close()
     assert (got["w"].to_numpy() == want["w"].to_numpy()).all()
-    # in-domain: identical to the 2-lane fast path
-    g2 = (
-        sdf.where("k = 1")
-        .agg(
-            dsum_fast("v", "f"),
-            dsum_fast_wide("v", "fw"),
-            davg_fast("v", "a"),
-            davg_fast_wide("v", "aw"),
-        )
-        .toPandas()
-    )
-    assert g2["f"][0] == g2["fw"][0] and g2["a"][0] == g2["aw"][0]

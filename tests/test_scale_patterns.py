@@ -122,3 +122,76 @@ def test_iter_udf_matches_expr(spark):
         .to_numpy()
     )
     assert (got == expr).all()
+
+
+def _partitionless_window_inputs(df) -> list[str]:
+    """The Input line of every Window node whose spec has no partition
+    (its window spec opens on a sort order, not a partition key)."""
+    import re
+
+    inputs = []
+    for block in C.formatted_plan(df).split("\n\n"):
+        if re.match(r"\(\d+\) Window\n", block) and re.search(
+            r"windowspecdefinition\([^,()]+ (ASC|DESC) ", block
+        ):
+            inputs.append(re.search(r"Input \[\d+\]: (.*)", block).group(1))
+    return inputs
+
+
+@pytest.mark.parametrize("by", [None, ["g"]])
+@pytest.mark.parametrize("parts", [1, 7])
+def test_global_prefix_matches_single_window(spark, monkeypatch, by, parts):
+    """``global_prefix``'s ranks, group sizes, running sums and totals
+    equal a single-window reference on tied sort values (unique
+    tie-break) at any slice count, with and without a group key that
+    holds NULLs.  ``fanout`` floors at the host's parallelism, so the
+    slice count is pinned there as well as in the shuffle width."""
+    import re
+    from decimal import Decimal
+
+    import pandas as pd
+    from pyspark.sql.types import DecimalType
+
+    from odc_product_docker_images_spark.functions import prefix
+    from odc_product_docker_images_spark.functions.det import dec_cast
+
+    rows = [
+        (i, None if i % 7 == 0 else "abc"[i % 3], i % 5, (i * 7) % 11 + 0.25)
+        for i in range(60)
+    ]
+    df = spark.createDataFrame(rows, "id long, g string, v int, x double")
+    monkeypatch.setattr(prefix, "fanout", lambda _df: parts)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    try:
+        out = prefix.global_prefix(
+            df, ["v", "id"], by=by, sums={"s": "v", "d": dec_cast("x")}
+        )
+        # the only partition-less window runs over the per-slice offsets
+        # table, never over the data rows (read before execution: AQE's
+        # executed plan prints the initial plan too)
+        inputs = _partitionless_window_inputs(out)
+        got = out.toPandas().sort_values("id").reset_index(drop=True)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert len(inputs) == (0 if by else 1), inputs
+    assert not any(re.search(r"\b(id|v|x)#", i) for i in inputs), inputs
+    # the decimal prefix keeps its scale through the offset add
+    assert out.schema["d"].dataType == DecimalType(38, 10)
+    assert got[["d", "d_total"]].map(lambda x: isinstance(x, Decimal)).all().all()
+
+    ref = pd.DataFrame(rows, columns=["id", "g", "v", "x"]).sort_values(["v", "id"])
+    key = ref["g"].fillna("<null>") if by else pd.Series(0, index=ref.index)
+    grp = ref.groupby(key)
+    ref = ref.assign(
+        rk=grp.cumcount() + 1,
+        n=grp["id"].transform("size"),
+        s=grp["v"].cumsum(),
+        s_total=grp["v"].transform("sum"),
+        d=grp["x"].cumsum(),
+        d_total=grp["x"].transform("sum"),
+    ).sort_values("id").reset_index(drop=True)
+    for c in ("rk", "n", "s", "s_total"):
+        assert got[c].tolist() == ref[c].tolist(), c
+    for c in ("d", "d_total"):  # x is k + 0.25: the float sums are exact
+        assert got[c].astype(float).tolist() == ref[c].tolist(), c

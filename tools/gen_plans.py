@@ -163,8 +163,10 @@ def main() -> None:
             "- similarity/dedup verify stages are Arrow-batched\n"
             "  (`cogroup`/`applyInPandas`), never per-pair Catalyst folds,\n"
             "  never row-at-a-time Python.\n"
-            "- `shard_pack` has no global single-task window; the prefix sum\n"
-            "  is range-partitioned + offset-broadcast.\n"
+            "- global ranks and running sums (`shard_pack`, `agg_gini`,\n"
+            "  `ml_lift_table`, `agg_mann_whitney`, ABC, Lorenz, RFM) come\n"
+            "  from `functions/prefix.global_prefix`: range-partitioned +\n"
+            "  offset-broadcast, no global single-task window.\n"
             "- STATIC scan counts overstate self-join families: the\n"
             "  shingle-explode subplan appears once per join side here, but\n"
             "  the physical planner's exchange reuse dedupes them at\n"
@@ -175,12 +177,11 @@ def main() -> None:
             "  per-group stats are WINDOWS over one partition key, never a\n"
             "  groupBy + join-back (branch duplication re-plans the whole\n"
             "  subtree — 2-4x the scans/Exchanges in this very table).\n"
-            "- low-cardinality ranks (agg_gini) use the range-partitioned\n"
-            "  prefix-sum form (shard_pack pattern): a 3-group window would\n"
-            "  sort a third of the table in ONE task.\n"
-            "- r6c extensions of the same machinery: the prefix pattern\n"
-            "  generalizes to MIN (agg_skyline_2d's carry-broadcast running\n"
-            "  minimum) and to global ranks (ml_lift_table, agg_mann_whitney);\n"
+            "- low-cardinality ranks (agg_gini) use `global_prefix` with\n"
+            "  `by=`: a 3-group window would sort a third of the table in\n"
+            "  ONE task.\n"
+            "- the same two-pass scan, written out, gives a running MIN\n"
+            "  (agg_skyline_2d's carry-broadcast running minimum);\n"
             "  global SCALARS ride a 1-row broadcast, never a per-row\n"
             "  SinglePartition window (ml_target_encoding pins exactly one\n"
             "  Window node); an explicit repartition on a grouping-key PREFIX\n"

@@ -15,10 +15,10 @@ always an integer), so the only float ops are final divisions of exact
 integers — identical IEEE on both engines.
 
 Scale shape (100 TB of scored examples): one score-grouped count
-shuffle, then the same deterministic-bucket distributed prefix pattern
-as ``agg_ks_test`` — bucket-partitioned cumsums, a ~#buckets-row
-exclusive-offset table built off the SAME exchange (reused at runtime),
-broadcast back.  No single-task global window, no driver loop.
+shuffle, then ``functions/prefix.global_prefix``'s two-pass scan over the
+distinct scores, as in ``agg_ks_test``: range-partitioned cumsums plus a
+per-slice offset table broadcast back.  No single-task global window, no
+driver loop.
 """
 
 from __future__ import annotations
@@ -38,19 +38,20 @@ from ..functions.det import (
     sql_dsum,
     sql_exact_double,
 )
+from ..functions.prefix import global_prefix
 from ..io import load
 from ..registry import register
 from ..textvec.similarity import dot as dot_me
 
-_SCORE_BUCKET_W = 16.0  # buckets = floor(score * 16): ~13 over the ±0.4 range
-
 
 def _scored_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-distinct-score positive/negative counts with global inclusive
-    prefix counts and totals — the shared ECDF scaffold for both keys.
+    prefix counts and totals — the shared ECDF scaffold for the ROC keys.
 
     Columns: score, cp, cn (group counts), gp, gn (global inclusive
     cumulative counts in ascending score order), p, n (class totals).
+    Scores are distinct after the group-by, so ``global_prefix``'s ROWS
+    prefix is the oracle's RANGE frame.
     """
     emb = load(spark, sf_dir, "embeddings")
     g = (
@@ -63,35 +64,15 @@ def _scored_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("pos").alias("cp"),
             (F.count(F.lit(1)) - F.sum("pos")).alias("cn"),
         )
-        .withColumn("bkt", F.floor(F.col("score") * _SCORE_BUCKET_W).cast("long"))
     )
-    within = Window.partitionBy("bkt").orderBy("score")
-    w = g.withColumn("lp", F.sum("cp").over(within)).withColumn(
-        "ln", F.sum("cn").over(within)
-    )
-    off_w = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
-    wall = Window.orderBy("bkt").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    # bucket totals off the cumsums (max of increasing prefix) so this
-    # branch shares the identical subtree → the one shuffle is reused
-    offsets = (
-        w.groupBy("bkt")
-        .agg(F.max("lp").alias("tp_"), F.max("ln").alias("tn_"))
-        .withColumn("op", F.coalesce(F.sum("tp_").over(off_w), F.lit(0)))
-        .withColumn("on", F.coalesce(F.sum("tn_").over(off_w), F.lit(0)))
-        .withColumn("p", F.sum("tp_").over(wall))
-        .withColumn("n", F.sum("tn_").over(wall))
-        .select("bkt", "op", "on", "p", "n")
-    )
-    return w.join(F.broadcast(offsets), "bkt", "left").select(
+    return global_prefix(g, ["score"], sums={"gp": "cp", "gn": "cn"}).select(
         "score",
         "cp",
         "cn",
-        (F.col("op") + F.col("lp")).alias("gp"),
-        (F.col("on") + F.col("ln")).alias("gn"),
-        "p",
-        "n",
+        "gp",
+        "gn",
+        F.col("gp_total").alias("p"),
+        F.col("gn_total").alias("n"),
     )
 
 
@@ -131,7 +112,7 @@ _SQL_GROUPS = """
 def ml_roc_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E1: full ROC curve — integer TP/FP at every distinct score
     threshold (predict positive when score ≥ t), from one score-grouped
-    pass + the bucket-partitioned prefix scaffold.  TP at t is
+    pass + the ``global_prefix`` ECDF scaffold.  TP at t is
     P − #(positives below t), i.e. totals minus the exclusive prefix —
     no descending re-sort needed.  TPR/FPR are single divisions of
     exact integers."""
@@ -173,7 +154,7 @@ def ml_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     per group (c_lt = examples strictly below, m = group size), always
     an integer.  The one float op is the final division.  Semantic
     cross-check: equals the trapezoidal integral of ``ml_roc_curve``
-    (pinned in tests).  Same single-shuffle scaffold as the curve."""
+    (pinned in tests).  Same ECDF scaffold as the curve."""
     cum = _scored_groups(spark, sf_dir)
     c_lt = F.col("gp") + F.col("gn") - F.col("cp") - F.col("cn")
     m = F.col("cp") + F.col("cn")
@@ -1189,10 +1170,10 @@ def ml_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus).  AP = Σ_thresholds ΔR·P over distinct scores descending =
     Σ (cp/P)·(TP/(TP+FP)); TP/FP at every threshold come from the SAME
     inclusive-prefix scaffold as the ROC/AUC/KS keys (`_scored_groups`:
-    bucket-partitioned distributed cumsums, no global single-task
-    window), so the whole key is one reused exchange + a 1-row final
-    aggregate.  Integer prefix counts make every per-threshold ratio
-    exact IEEE; the AP sum routes through the decimal path.  A
+    ``global_prefix``'s distributed cumsums, no global single-task
+    window), so the whole key is that scan + a 1-row final aggregate.
+    Integer prefix counts make every per-threshold ratio exact IEEE; the
+    AP sum routes through the decimal path.  A
     zero-positive corpus (degenerate grain) emits NULL via the p > 0
     guard instead of ANSI DIVIDE_BY_ZERO."""
     g = _scored_groups(spark, sf_dir)
@@ -1435,7 +1416,7 @@ def ml_ks_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
     discrimination metric, plus the threshold achieving it (the natural
     cutoff candidate) and the 5% two-sample significance screen
     (1.36·√((p+n)/(p·n))).  Rides the same `_scored_groups`
-    distributed-prefix scaffold as ROC/AUC/PR (one reused exchange):
+    distributed-prefix scaffold as ROC/AUC/PR:
     per-threshold CDFs are exact integer-ratio IEEE divisions, the max
     is order-insensitive, and the argmax threshold resolves by MIN over
     the diff = maxdiff equality on identical doubles.  A single-class

@@ -11,10 +11,10 @@ the decimal path, and libm steps round 4-6 dp at a pinned point.
 
 Scale notes (100 TB): the KS statistic is a GLOBAL ECDF comparison — the
 naive form is a single-task global window over every distinct value.
-Here the ECDF prefix counts use a value-bucket form of the two-pass
-scan in ``functions/prefix.py``: partition by a fixed-width value
-bucket, cumsum within buckets in parallel, add a broadcast offset table
-of bucket totals.  The argmax row is a
+Here the ECDF prefix counts come from the two-pass scan in
+``functions/prefix.py`` over the value-grouped counts: range-partition,
+cumsum within slices in parallel, add a broadcast offset table of slice
+totals.  The argmax row is a
 TakeOrderedAndProject (limit 1), never a full sort.  ANOVA is one
 map-side-combinable aggregate over the corpus followed by arithmetic on
 a #groups-row table.
@@ -37,14 +37,9 @@ from ..functions.det import (
     sql_dsum,
     sql_exact_double,
 )
+from ..functions.prefix import global_prefix
 from ..io import load
 from ..registry import register
-
-# ECDF partition width over the value domain (~31 buckets at the fixture
-# range; at real scale pick W so per-bucket rows fit an executor task —
-# the bucket table stays tiny either way)
-_KS_BUCKET_W = 16.0
-
 
 @register(
     "agg_ks_test",
@@ -83,59 +78,27 @@ def agg_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts, so the argmax and the final one division are identical IEEE
     on both engines.
 
-    Distributed shape: a two-level prefix sum with ONE corpus shuffle —
-    hash-partition by a deterministic value bucket, inclusive
-    RANGE-frame cumsums within buckets (ties fold in, so no value-dedup
-    pre-aggregate), then a ~#buckets-row exclusive-offset table built
-    off the SAME exchange (bucket totals = max of the increasing prefix,
-    so the branch shares the identical subtree instead of re-scanning)
-    and broadcast back.  Arm totals fall out of the same tiny table; the
-    winning row is a limit-1 TakeOrderedAndProject, never a full sort.
-    No single-task global window anywhere."""
+    Distributed shape: one value-grouped count (the oracle's ``by_v``),
+    then ``global_prefix``'s two-pass scan for the ECDF counts and the
+    arm totals.  Values are distinct after the group-by, so the ROWS
+    prefix is the oracle's RANGE frame.  The winning row is a limit-1
+    TakeOrderedAndProject, never a full sort.  No single-task global
+    window anywhere."""
     ev = load(spark, sf_dir, "events")
-    s = ev.select(
-        (F.col("user_id") % 2).alias("arm"),
-        "value",
-        F.floor(F.col("value") / _KS_BUCKET_W).cast("long").alias("bkt"),
+    by_v = (
+        ev.select((F.col("user_id") % 2).alias("arm"), "value")
+        .groupBy("value")
+        .agg(
+            F.sum("arm").alias("c1"),
+            (F.count(F.lit(1)) - F.sum("arm")).alias("c0"),
+        )
     )
-    # within-bucket inclusive ECDF counts: RANGE frame folds ties in, so
-    # no value-dedup pre-aggregate is needed — one corpus shuffle total
-    within = (
-        Window.partitionBy("bkt")
-        .orderBy("value")
-        .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w = s.withColumn("l1", F.sum("arm").over(within)).withColumn(
-        "l0", F.sum(F.lit(1) - F.col("arm")).over(within)
-    )
-    # per-bucket totals come off the cumsums themselves (max of an
-    # increasing prefix = bucket total): this branch shares the IDENTICAL
-    # deterministic scan→Exchange(bkt)→window subtree with the main
-    # branch, so it reuses the one shuffle instead of re-scanning.
-    # Exclusive prefix offsets + grand totals are windows over the
-    # ~#buckets-row table (single tiny-window task, then broadcast).
-    off_w = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
-    wall = Window.orderBy("bkt").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    offsets = (
-        w.groupBy("bkt")
-        .agg(F.max("l1").alias("p1"), F.max("l0").alias("p0"))
-        .withColumn("o1", F.coalesce(F.sum("p1").over(off_w), F.lit(0)))
-        .withColumn("o0", F.coalesce(F.sum("p0").over(off_w), F.lit(0)))
-        .withColumn("n1", F.sum("p1").over(wall))
-        .withColumn("n0", F.sum("p0").over(wall))
-        .select("bkt", "o1", "o0", "n1", "n0")
-    )
-    # LEFT join (every bkt matches by construction): an inner join would
-    # infer an isnotnull(bkt) filter under the left exchange only,
-    # breaking the subtree equality that lets the shuffle be reused
-    cum = w.join(F.broadcast(offsets), "bkt", "left").select(
+    cum = global_prefix(by_v, ["value"], sums={"cc1": "c1", "cc0": "c0"}).select(
         F.col("value").alias("at_value"),
-        (F.col("o1") + F.col("l1")).alias("cc1"),
-        (F.col("o0") + F.col("l0")).alias("cc0"),
-        "n1",
-        "n0",
+        "cc1",
+        "cc0",
+        F.col("cc1_total").alias("n1"),
+        F.col("cc0_total").alias("n0"),
     )
     scored = cum.select(
         "at_value",
@@ -1218,65 +1181,38 @@ def agg_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubled-rank identity (2·R_j = Σ_v c_vg·(2·below_v + m_v + 1)), as
     do the tie weights Σ(m³−m).
 
-    Distributed shape: one (value, group) count; per-value totals and
-    the global inclusive cumulative both ride windows keyed on value
-    (the oracle's plain global RANGE window is the semantic twin of the
-    bucket-partitioned prefix used across the KS/ROC scaffold — here
-    the grouped table is value-distinct, so the same bucket trick
-    applies verbatim at scale); H is a #groups-row reduction.  The one
-    float chain is a fixed IEEE expression on exact integers."""
+    Distributed shape: one (value, group) count; its per-value totals
+    ``m`` and their inclusive cumulative ``cc`` come from
+    ``global_prefix``'s two-pass scan over the value-distinct table (the
+    ROWS prefix is the oracle's RANGE frame) and join back on value; H
+    is a #groups-row reduction.  The one float chain is a fixed IEEE
+    expression on exact integers."""
     ev = load(spark, sf_dir, "events")
-    cvg = ev.groupBy("value", "event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    bkt = F.floor(F.col("value") / _KS_BUCKET_W).cast("long")
-    w_v = Window.partitionBy("value")
-    cvg = cvg.withColumn("bkt", bkt)
-    within = (
-        Window.partitionBy("bkt")
-        .orderBy("value")
-        .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w = cvg.withColumn("m", F.sum("c").over(w_v)).withColumn(
-        "lc", F.sum("c").over(within)
-    )
-    off_w = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = (
-        w.groupBy("bkt")
-        .agg(F.max("lc").alias("pt"))
-        .withColumn("off", F.coalesce(F.sum("pt").over(off_w), F.lit(0)))
-        .select("bkt", "off")
-    )
-    # persisted: the group rank sums AND the tie-weight reduction both
-    # consume it (distinct-(value,group)-bounded, the PMI-vocab exception)
-    vstats = (
-        w.join(F.broadcast(offsets), "bkt", "left")
-        .select(
-            "event_type",
-            "value",
-            "c",
-            "m",
-            (F.col("off") + F.col("lc")).alias("cc"),
-        )
+    # persisted: the per-value totals and the group rank sums both read it
+    # (distinct-(value,group)-bounded, the PMI-vocab exception)
+    cvg = (
+        ev.groupBy("value", "event_type")
+        .agg(F.count(F.lit(1)).cast("long").alias("c"))
         .persist()
     )
-    contrib = vstats.groupBy("event_type").agg(
-        F.sum(
-            F.col("c") * (2 * (F.col("cc") - F.col("m")) + F.col("m") + 1)
-        )
-        .cast("long")
-        .alias("r2_j"),
-        F.sum("c").cast("long").alias("n_j"),
-    )
-    ties = (
-        vstats.groupBy("value")
-        .agg(F.max("m").alias("m"))
+    per_v = global_prefix(
+        cvg.groupBy("value").agg(F.sum("c").alias("m")), ["value"], sums={"cc": "m"}
+    ).select("value", "m", "cc")
+    contrib = (
+        cvg.join(per_v, "value")
+        .groupBy("event_type")
         .agg(
-            F.sum(F.col("m") * F.col("m") * F.col("m") - F.col("m"))
+            F.sum(F.col("c") * (2 * (F.col("cc") - F.col("m")) + F.col("m") + 1))
             .cast("long")
-            .alias("tsum"),
-            F.sum("m").cast("long").alias("n"),
+            .alias("r2_j"),
+            F.sum("c").cast("long").alias("n_j"),
         )
+    )
+    ties = per_v.agg(
+        F.sum(F.col("m") * F.col("m") * F.col("m") - F.col("m"))
+        .cast("long")
+        .alias("tsum"),
+        F.sum("m").cast("long").alias("n"),
     )
     joined = contrib.crossJoin(F.broadcast(ties))
     n = F.max("n").cast("double")
@@ -1377,8 +1313,8 @@ def agg_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Corpus work is the per-user aggregate; ranking runs on the
     #users-row table (small-side windows by the documented convention —
-    at real scale the two rank transforms take the same bucket-prefix
-    scaffold as agg_kruskal_wallis)."""
+    at real scale the two rank transforms take the same
+    ``global_prefix`` scaffold as agg_kruskal_wallis)."""
     ev = load(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
         dsum("value", "tv"), F.count(F.lit(1)).cast("long").alias("ne")
@@ -1480,8 +1416,8 @@ def agg_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     normal approximation with the tie-corrected variance.
 
     Corpus work is one conditional per-user aggregate; ranking runs on
-    the #users table (small-side windows; the kruskal bucket scaffold
-    is the at-scale form).  Paired means round 6 dp through the davg
+    the #users table (small-side windows; the kruskal ``global_prefix``
+    scaffold is the at-scale form).  Paired means round 6 dp through the davg
     path BEFORE differencing so the sign/tie structure is cross-engine
     frozen; rank sums ride the decimal path (.5-grid values), z rounds
     6 dp."""
@@ -1994,43 +1930,18 @@ def agg_sprt_decision(spark: SparkSession, sf_dir: str) -> DataFrame:
     crossing: the always-valid sequential test that replaces
     fixed-horizon peeking.  The LLR never float-accumulates: after k
     events it is EXACTLY c1·L1 + c0·L0 on integer prefix counts, so the
-    whole path needs only the ECDF-style cumulative counts (here the
-    oracle's plain ordered window; the day-bucketed prefix scaffold is
-    the at-scale form used across the KS/ROC keys), one rounded
-    expression per row, and a conditional-MIN reduction for the first
-    crossing."""
+    whole path needs only the ECDF-style cumulative counts (the rank
+    ``rk``, the stream length ``n`` and the hit count ``c1`` from
+    ``global_prefix``'s two-pass scan in (ts, event_id) order), one
+    rounded expression per row, and a conditional-MIN reduction for the
+    first crossing."""
     ev = load(spark, sf_dir, "events")
     seq = ev.select(
         (F.col("event_type") == "purchase").cast("long").alias("hit"),
-        F.date_trunc("day", "ts").alias("bkt"),
         "ts",
         "event_id",
     )
-    within = (
-        Window.partitionBy("bkt")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w = seq.withColumn("l1c", F.sum("hit").over(within)).withColumn(
-        "lc", F.count(F.lit(1)).over(within)
-    )
-    off_w = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
-    wall = Window.orderBy("bkt").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    offsets = (
-        w.groupBy("bkt")
-        .agg(F.max("l1c").alias("p1c"), F.max("lc").alias("pc"))
-        .withColumn("o1", F.coalesce(F.sum("p1c").over(off_w), F.lit(0)))
-        .withColumn("oc", F.coalesce(F.sum("pc").over(off_w), F.lit(0)))
-        .withColumn("n", F.sum("pc").over(wall))
-        .select("bkt", "o1", "oc", "n")
-    )
-    cum = w.join(F.broadcast(offsets), "bkt", "left").select(
-        (F.col("o1") + F.col("l1c")).alias("c1"),
-        (F.col("oc") + F.col("lc")).alias("rk"),
-        "n",
-    )
+    cum = global_prefix(seq, ["ts", "event_id"], sums={"c1": "hit"})
     llr = dround(
         F.col("c1") * F.lit(_SPRT_L1)
         + (F.col("rk") - F.col("c1")) * F.lit(_SPRT_L0)

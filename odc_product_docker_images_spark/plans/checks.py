@@ -15,10 +15,54 @@ import re
 from pyspark.sql import DataFrame
 
 
+_OPTIMIZED_OUT = "\n===== Adaptively Optimized Out Exchanges ====="
+_NODE_ID = re.compile(r"\((\d+)\)(?:$|[ ,])")
+_CODEGEN_ID = re.compile(r" \[codegen id : \d+\]")
+
+
 def formatted_plan(df: DataFrame) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
+    """The formatted physical plan as planned, whether or not it has run.
+
+    Once an adaptive plan (the query's, or a persisted subtree's) has
+    executed, Spark prints its final plan beside its initial one, with new
+    node ids, and tags the shared nodes with codegen ids.  This keeps the
+    initial plans only, the details of the nodes they print, and a codegen
+    id only where the tree shows the node codegen'd, so a fresh frame, the
+    same frame after an action and a new frame over a warm cache all read
+    the same counts."""
+    text = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
         df._jdf.queryExecution(), "formatted"
-    )
+    ).split(_OPTIMIZED_OUT)[0]
+    out, ids, starred = [], set(), set()
+    # every adaptive plan prints "Final Plan", its final tree, "Initial
+    # Plan", its initial tree: the markers nest like brackets (their
+    # indentation does not), and a final tree is skipped whole
+    final = 0
+    block = None  # node id of the details block being read
+    for line in text.split("\n"):
+        if line.endswith("+- == Final Plan =="):
+            final += 1
+            continue
+        if line.endswith("+- == Initial Plan =="):
+            final -= 1
+            continue
+        if final:
+            continue
+        head = re.match(r"\((\d+)\) ", line)
+        if head:
+            block = head.group(1)
+        elif not line:
+            block = None
+        if block is None:  # a tree line: each tree precedes its details
+            node = _NODE_ID.search(line)
+            if node:
+                ids.add(node.group(1))
+                if re.search(r"\* \w", line):
+                    starred.add(node.group(1))
+            out.append(line)
+        elif block in ids:
+            out.append(line if block in starred else _CODEGEN_ID.sub("", line))
+    return "\n".join(out)
 
 
 def pushed_filters(df: DataFrame) -> str:
@@ -78,3 +122,16 @@ def scan_count(df: DataFrame) -> int:
 def codegen_stage_count(df: DataFrame) -> int:
     ids = re.findall(r"\[codegen id : (\d+)\]", formatted_plan(df))
     return len(set(ids))
+
+
+def partitionless_window_inputs(df: DataFrame) -> list[str]:
+    """The Input line of every Window node whose spec has no partition
+    (its window spec opens on a sort order, not a partition key): a
+    single-task window, harmless only over a small table."""
+    inputs = []
+    for block in formatted_plan(df).split("\n\n"):
+        if re.match(r"\(\d+\) Window\n", block) and re.search(
+            r"windowspecdefinition\([^,()]+ (ASC|DESC) ", block
+        ):
+            inputs.append(re.search(r"Input \[\d+\]: (.*)", block).group(1))
+    return inputs

@@ -124,54 +124,22 @@ _MODULES = [
     "odc_product_docker_images_spark.textvec.nb",
 ]
 
-# Round-11 grading window: the driver grades ~the first 50 keys in
-# ``queries()`` dict order.  ``all_queries()`` yields these keys first (in
-# this order), then every other registered key in registration order.
-#
-# Composition (the ROTATION contract — rotate EVERY non-flagship slot each
-# round; forgetting to rotate burns the whole grading budget on
-# re-confirms, which r6/r7 proved):
-#   1 flagship
-#   + new r11 keys (new keys ALWAYS enter, per CLAUDE.md)
-#   + re-grades whose code/oracle changed this round (listed in
-#     WINDOW_REGRADES so the stale-window guard can exempt them)
-#   + rotation slots = the OLDEST never-driver-graded full-oracle keys,
-#     in defer-list order.
-# Derive "never graded" from the CORRECTNESS_r*.json files, never from
-# memory (r5 produced no artifacts at all).
-#
-# WINDOW_ROUND: the round this window was composed FOR.  The stale-window
-# guard (tests/test_driver_contract.py) only treats keys graded in rounds
-# STRICTLY BEFORE this as "already graded" — the r8 guard globbed every
-# CORRECTNESS_r*.json including the round's own deposit, so it turned red
-# the moment the driver graded (VERDICT r8 "What's wrong" #1).
+# The driver grades about the first 50 keys in ``queries()`` dict order:
+# ``all_queries()`` yields GRADING_WINDOW's keys first, in this order, then
+# every other key in registration order (pinned in
+# tests/test_driver_contract.py).  The stale-window guard there counts a key
+# as already graded only from CORRECTNESS_r*.json files of rounds before
+# WINDOW_ROUND, and lets WINDOW_REGRADES back in.
 WINDOW_ROUND = 11
-# Keys intentionally re-windowed although they carry a prior driver row —
-# their code AND oracle changed this round.  r11 carries none: the window
-# is 4 new gate keys + pure backlog drain (VERDICT r10 tasks #1/#5); the
-# 3 re-grades wanted (udtf_chunk_text, table_merge_upsert,
-# table_change_feed — code changed r5, rows predate it) are DEFERRED to
-# r12 together with the last 10 backlog keys (13 slots total ends the
-# backlog era).
 WINDOW_REGRADES: set[str] = set()
 GRADING_WINDOW = [
-    # -- flagship: stays driver-graded every round --
     "agg_multi_stat",
-    # -- new r11 keys: the four oracle-pinned quality gates that close
-    #    the last gate-less rows-only blind spots (JPEG entropy-layer
-    #    losslessness, zlib round-trip/bounds, map serialization
-    #    round-trip, catalog-vs-fixture schema+rowcount):
     "jpeg_decode_gate", "compression_gate", "scalar_map_gate",
     "catalog_gate",
-    # -- rotation: the 45 OLDEST never-driver-graded full-oracle keys
-    #    (derived fresh from CORRECTNESS_r1..r10 vs the 389-key registry:
-    #    55 never-graded; backlog after this round = 10).
-    # rest of the displaced-r9 cohort (oldest):
     "table_bloom_skipping", "graph_label_prop_step", "agg_spatial_moran",
     "text_collocations_pmi", "agg_abc_classification",
     "agg_bitmap_distinct", "agg_stl_lite", "window_rolling_corr",
     "agg_hurst_rs", "sim_matryoshka_prefix",
-    # r6d tail, defer-list order (first 35):
     "ml_naive_bayes", "profile_parquet_footers", "forecast_croston",
     "agg_price_index", "agg_ks_by_group_fdr", "agg_cmh_test",
     "table_content_checksum", "agg_kruskal_wallis", "agg_spearman_corr",
@@ -184,26 +152,6 @@ GRADING_WINDOW = [
     "text_mattr", "agg_sprt_decision", "agg_adf_test",
     "graph_assortativity", "agg_new_vs_returning", "composite_q10_shape",
     "agg_entropy_by_group", "agg_capture_recapture", "ml_ndcg_at_k",
-    # R12 DEFER LIST — never driver-graded oracled keys still waiting
-    # (all pass local parity; next rotation starts here, oldest first):
-    #   r6d tail (last 10): agg_odds_ratio_mh, agg_cohort_decay_fit,
-    #     ml_recall_at_k, text_winnowing, agg_interevent_burstiness,
-    #     agg_apdex_daily, agg_gumbel_fit, window_record_highs,
-    #     agg_srm_check, window_mix_drift
-    #   re-grades wanted (code changed r5, old rows exist):
-    #     udtf_chunk_text, table_merge_upsert, table_change_feed
-    #   (table_incremental_join + source_fixed_width_roundtrip changed
-    #   code in r11 — 100x finds: derived insert-key offset, int64-proof
-    #   field widths — but their VALUES at every graded grain are
-    #   byte-identical (verified sf0.01/degen/10x), the table_compaction
-    #   r10 precedent: no re-grade slot burned.)
-    #   NEW in r11 AFTER the window was frozen at 50 (VERDICT r10 #7's
-    #   optional surface, built in the continuation session — full
-    #   oracles, parity-green at sf0.01, replica-tested):
-    #     profile_embedding_drift, shard_manifest_checksum,
-    #     table_snapshot_drift
-    #   (+ any keys added after this comment — check COVERAGE.md vs
-    #   CORRECTNESS_r* row history.)
 ]
 
 _loaded = False

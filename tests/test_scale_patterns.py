@@ -124,20 +124,6 @@ def test_iter_udf_matches_expr(spark):
     assert (got == expr).all()
 
 
-def _partitionless_window_inputs(df) -> list[str]:
-    """The Input line of every Window node whose spec has no partition
-    (its window spec opens on a sort order, not a partition key)."""
-    import re
-
-    inputs = []
-    for block in C.formatted_plan(df).split("\n\n"):
-        if re.match(r"\(\d+\) Window\n", block) and re.search(
-            r"windowspecdefinition\([^,()]+ (ASC|DESC) ", block
-        ):
-            inputs.append(re.search(r"Input \[\d+\]: (.*)", block).group(1))
-    return inputs
-
-
 @pytest.mark.parametrize("by", [None, ["g"]])
 @pytest.mark.parametrize("parts", [1, 7])
 def test_global_prefix_matches_single_window(spark, monkeypatch, by, parts):
@@ -168,9 +154,8 @@ def test_global_prefix_matches_single_window(spark, monkeypatch, by, parts):
             df, ["v", "id"], by=by, sums={"s": "v", "d": dec_cast("x")}
         )
         # the only partition-less window runs over the per-slice offsets
-        # table, never over the data rows (read before execution: AQE's
-        # executed plan prints the initial plan too)
-        inputs = _partitionless_window_inputs(out)
+        # table, never over the data rows
+        inputs = C.partitionless_window_inputs(out)
         got = out.toPandas().sort_values("id").reset_index(drop=True)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
@@ -195,3 +180,37 @@ def test_global_prefix_matches_single_window(spark, monkeypatch, by, parts):
         assert got[c].tolist() == ref[c].tolist(), c
     for c in ("d", "d_total"):  # x is k + 0.25: the float sums are exact
         assert got[c].astype(float).tolist() == ref[c].tolist(), c
+
+
+_PREFIX_ECDF_KEYS = [
+    "ml_roc_curve",
+    "ml_auc_exact",
+    "ml_decision_stump",
+    "ml_auc_delong_se",
+    "ml_pr_auc",
+    "ml_ks_statistic",
+    "agg_ks_test",
+    "agg_kruskal_wallis",
+    "agg_sprt_decision",
+]
+
+
+@pytest.mark.parametrize("key", _PREFIX_ECDF_KEYS)
+def test_prefix_ecdf_keys_are_fanout_invariant(spark, monkeypatch, key):
+    """The keys whose ECDF or running count comes from ``global_prefix``
+    return the same rows at one slice and at seven: the offsets, not the
+    slice boundaries, carry the global order."""
+    from odc_product_docker_images_spark import registry
+    from odc_product_docker_images_spark.functions import prefix
+
+    fn = registry.all_queries()[key].fn
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    got = []
+    try:
+        for parts in (1, 7):
+            monkeypatch.setattr(prefix, "fanout", lambda _df, n=parts: n)
+            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+            got.append(sorted(fn(spark, SF).collect(), key=str))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert got[0] == got[1]
